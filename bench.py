@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the host's
+CPU count, ``os.cpu_count()``).
 
 Output contract (the driver tail-captures stdout and parses the LAST
 line): the final stdout line is a COMPACT JSON object — totals plus
@@ -442,7 +443,7 @@ def run_anchor_protocol(sf_dir: str) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     os.environ["SPARK_GRAFT_CPUS"] = cpus
 
     from kafka_overwatch_spark import registry

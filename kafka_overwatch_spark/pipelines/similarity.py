@@ -102,13 +102,6 @@ def brute_force_topk(
     )
 
 
-def lsh_bucket_assignments(embeddings: DataFrame, bits: int = LSH_BITS) -> DataFrame:
-    """The ANN index structure: vec_id → hyperplane sign bucket."""
-    return embeddings.select(
-        "vec_id", lsh_bucket(F.col("embedding"), bits).alias("bucket")
-    )
-
-
 def lsh_neighbor_pairs(
     embeddings: DataFrame, threshold: float = 0.3, bits: int = LSH_BITS
 ) -> DataFrame:

@@ -15,27 +15,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..pipelines.text import contamination_hits
-
-
-def _write_idempotent(df: DataFrame, out_dir: str, batch_id: int) -> None:
-    """Replay-safe foreachBatch append: results land in a batch_id=N
-    partition that is dynamically OVERWRITTEN, so a batch replayed after
-    a crash-between-write-and-checkpoint replaces its own rows instead
-    of duplicating them."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+from .state import drain, write_batch
 
 
 def doc_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -61,7 +44,7 @@ class ContaminationScreen:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         hits = contamination_hits(batch_df, self.probes)
-        _write_idempotent(hits, self.out_dir, batch_id)
+        write_batch(hits, self.out_dir, batch_id)
 
 
 class DedupScreen:
@@ -80,7 +63,7 @@ class DedupScreen:
         from ..pipelines.dedup import screen_against_corpus, shingle_docs
 
         hits = screen_against_corpus(shingle_docs(batch_df), self.corpus)
-        _write_idempotent(hits, self.out_dir, batch_id)
+        write_batch(hits, self.out_dir, batch_id)
 
 
 def run_dedup_screen(
@@ -89,23 +72,14 @@ def run_dedup_screen(
     corpus_shingles: DataFrame,
     out_dir: str,
     checkpoint: str,
-):
+) -> StreamingQuery:
     """Drain the document feed through the incremental dedup screen
     (availableNow); parquet sink + checkpoint for restart recovery."""
-    q = (
-        doc_stream(spark, input_dir)
-        .writeStream.foreachBatch(DedupScreen(corpus_shingles, out_dir))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = DedupScreen(corpus_shingles, out_dir)
+    return drain(
+        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            "dedup screen did not drain within 300s — failing loudly"
-        )
-    return q
 
 
 def run_contamination_screen(
@@ -114,24 +88,15 @@ def run_contamination_screen(
     probes: DataFrame,
     out_dir: str,
     checkpoint: str,
-):
+) -> StreamingQuery:
     """Drain the document feed through the screen (availableNow);
     returns the finished query. Restart-safe: the parquet sink +
     checkpoint pair recovers, unlike the memory sink."""
-    q = (
-        doc_stream(spark, input_dir)
-        .writeStream.foreachBatch(ContaminationScreen(probes, out_dir))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = ContaminationScreen(probes, out_dir)
+    return drain(
+        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            "document screen did not drain within 300s — failing loudly"
-        )
-    return q
 
 
 def _growing_union(
@@ -411,23 +376,7 @@ class GrowingDedupScreen:
             bands=bands_new.join(keepers, "doc_id"),
             rejected=rejected,
         ).coalesce(8)
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                uni.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("kind", "batch_id")
-                .parquet(f"{self.base}/store")
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch(uni, f"{self.base}/store", batch_id, "kind")
 
 
 def run_growing_dedup(
@@ -436,24 +385,15 @@ def run_growing_dedup(
     base_path: str,
     out_dir: str,
     checkpoint: str,
-):
+) -> StreamingQuery:
     """Drain the document feed through the growing-corpus dedup screen
     (availableNow, one file per trigger so arrival order is the file
     order)."""
-    q = (
-        doc_stream(spark, input_dir)
-        .writeStream.foreachBatch(GrowingDedupScreen(base_path, out_dir))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = GrowingDedupScreen(base_path, out_dir)
+    return drain(
+        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            "growing dedup screen did not drain within 300s"
-        )
-    return q
 
 
 # ---------------------------------------------------------------------------
@@ -610,7 +550,7 @@ class DsirScreen:
         verdicts = dsir_score(batch_df, self.lm).withColumn(
             "keep", F.col("log_ratio") >= self.tau
         )
-        _write_idempotent(verdicts, self.out_dir, batch_id)
+        write_batch(verdicts, self.out_dir, batch_id)
 
 
 def run_dsir_screen(
@@ -620,24 +560,15 @@ def run_dsir_screen(
     out_dir: str,
     checkpoint: str,
     tau: float = 0.0,
-):
+) -> StreamingQuery:
     """Drain the document feed through the DSIR screen (availableNow);
     the LM is read once from the persisted table."""
     lm = spark.read.parquet(f"{base_path}/dsir_lm")
-    q = (
-        doc_stream(spark, input_dir)
-        .writeStream.foreachBatch(DsirScreen(lm, out_dir, tau))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = DsirScreen(lm, out_dir, tau)
+    return drain(
+        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            "dsir screen did not drain within 300s — failing loudly"
-        )
-    return q
 
 
 # ---------------------------------------------------------------------------
@@ -842,7 +773,7 @@ class GrowingContainmentScreen:
             .select(F.col("vec_id").alias("doc_id"))
             .withColumn("reason", F.lit("intra_batch_contained"))
         )
-        _write_idempotent(rejected, self.out_dir, batch_id)
+        write_batch(rejected, self.out_dir, batch_id)
         kept_postings = kept.select("doc_id", F.explode("sh").alias("s"))
         for frame, name in (
             (kept.select("doc_id", "sh"), "shingles"),
@@ -852,23 +783,7 @@ class GrowingContainmentScreen:
                 "freq",
             ),
         ):
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                (
-                    frame.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(f"{self.base}/{name}")
-                )
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
+            write_batch(frame, f"{self.base}/{name}", batch_id)
 
 
 def run_growing_containment(
@@ -879,27 +794,16 @@ def run_growing_containment(
     checkpoint: str,
     threshold: float = 0.8,
     max_bucket: int | None = None,
-):
+) -> StreamingQuery:
     """Drain the document feed through the growing containment screen
     (availableNow, one file per trigger = arrival order is file order)."""
-    q = (
-        doc_stream(spark, input_dir)
-        .writeStream.foreachBatch(
-            GrowingContainmentScreen(
-                base_path, out_dir, threshold, max_bucket
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = GrowingContainmentScreen(
+        base_path, out_dir, threshold, max_bucket
     )
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            "growing containment screen did not drain within 300s"
-        )
-    return q
+    return drain(
+        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -913,11 +817,11 @@ def run_growing_containment(
 # batches see them.
 
 
-def _write_semantic_index_slice(
-    emb: DataFrame, asg: DataFrame, base_path: str, batch_id: int, mode: str
-) -> None:
-    """One batch's slice of the growing semantic index, written
-    PRUNABLE (VERDICT r7 What's-wrong #2): both tables are range-laid
+def _semantic_index_slice(
+    emb: DataFrame, asg: DataFrame
+) -> dict[str, DataFrame]:
+    """One batch's slice of the growing semantic index by table name,
+    laid PRUNABLE (VERDICT r7 What's-wrong #2): both tables are range-laid
     out and sorted on their probe key (embeddings on the coarse
     ``cell``, buckets on the packed ``tb``) so the per-batch IN-filters
     prune at parquet row-group stats — the scans read matching row
@@ -928,23 +832,12 @@ def _write_semantic_index_slice(
     sf0.1). At warehouse scale the same two sorted tables simply get
     coarser files; the key layout carries over unchanged."""
     cells = asg.groupBy("vec_id").agg(F.min("cell").alias("cell"))
-    (
-        emb.join(cells, "vec_id")
+    return {
+        "embeddings": emb.join(cells, "vec_id")
         .repartitionByRange(2, "cell")
-        .sortWithinPartitions("cell")
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode(mode)
-        .partitionBy("batch_id")
-        .parquet(f"{base_path}/embeddings")
-    )
-    (
-        asg.repartitionByRange(2, "tb")
-        .sortWithinPartitions("tb")
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode(mode)
-        .partitionBy("batch_id")
-        .parquet(f"{base_path}/buckets")
-    )
+        .sortWithinPartitions("cell"),
+        "buckets": asg.repartitionByRange(2, "tb").sortWithinPartitions("tb"),
+    }
 
 
 def init_semantic_index(
@@ -981,7 +874,14 @@ def init_semantic_index(
         bits=bits if bits is not None else LSH_BITS,
         tables=tables if tables is not None else NEARDUP_TABLES,
     ).localCheckpoint(eager=True)
-    _write_semantic_index_slice(emb, asg, base_path, -1, "overwrite")
+    # a plain (static) overwrite: seeding replaces the whole index
+    for name, frame in _semantic_index_slice(emb, asg).items():
+        (
+            frame.withColumn("batch_id", F.lit(-1))
+            .write.mode("overwrite")
+            .partitionBy("batch_id")
+            .parquet(f"{base_path}/{name}")
+        )
 
 
 class GrowingSemanticScreen:
@@ -1046,7 +946,7 @@ class GrowingSemanticScreen:
             r["tb"] for r in asg_new.select("tb").distinct().collect()
         ]
         if not probe_tbs:  # empty micro-batch: no-op, quarantine nothing
-            _write_idempotent(
+            write_batch(
                 spark.createDataFrame([], "doc_id long, reason string"),
                 self.out_dir,
                 batch_id,
@@ -1186,26 +1086,13 @@ class GrowingSemanticScreen:
             .select(F.col("vec_id").alias("doc_id"))
             .withColumn("reason", F.lit("intra_batch_semantic_dup"))
         )
-        _write_idempotent(rejected.coalesce(8), self.out_dir, batch_id)
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            # slices of the checkpointed batch frames — not a third GEMM
-            _write_semantic_index_slice(
-                kept.select("vec_id", "embedding"),
-                asg_new.join(keepers, "vec_id"),
-                self.base,
-                batch_id,
-                "overwrite",
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch(rejected.coalesce(8), self.out_dir, batch_id)
+        # slices of the checkpointed batch frames — not a third GEMM
+        for name, frame in _semantic_index_slice(
+            kept.select("vec_id", "embedding"),
+            asg_new.join(keepers, "vec_id"),
+        ).items():
+            write_batch(frame, f"{self.base}/{name}", batch_id)
 
 
 def run_growing_semantic(
@@ -1216,31 +1103,20 @@ def run_growing_semantic(
     checkpoint: str,
     threshold: float = 0.9,
     ann_config: tuple[int, int] | None = None,
-):
+) -> StreamingQuery:
     """Drain the document feed through the growing semantic screen
     (availableNow, one file per trigger — arrival order is file
     order). ``ann_config``: a measured (bits, tables) pair from
     similarity.choose_ann_config — must be the pair the index was
     seeded with (init_semantic_index)."""
     bits, tables = ann_config if ann_config else (None, None)
-    q = (
-        doc_stream(spark, input_dir)
-        .writeStream.foreachBatch(
-            GrowingSemanticScreen(
-                base_path, out_dir, threshold, bits=bits, tables=tables
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = GrowingSemanticScreen(
+        base_path, out_dir, threshold, bits=bits, tables=tables
     )
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            "growing semantic screen did not drain within 300s"
-        )
-    return q
+    return drain(
+        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
+    )
 
 
 class QualityDriftMonitor:
@@ -1265,7 +1141,6 @@ class QualityDriftMonitor:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..pipelines.text import quality_columns
 
-        spark = batch_df.sparkSession
         q = quality_columns()["quality_score"]
         scored = batch_df.filter(F.col("text").isNotNull()).select(
             q.alias("score")
@@ -1282,24 +1157,7 @@ class QualityDriftMonitor:
                 "score_sum"
             ),
         )
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                release.coalesce(1)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch(release.coalesce(1), self.out_dir, batch_id)
 
 
 def quality_drift_from_releases(
@@ -1373,21 +1231,15 @@ def run_quality_drift(
     input_dir: str,
     out_dir: str,
     checkpoint: str,
-    timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain the document feed through the quality-drift monitor
     (availableNow; production runs the trigger at the crawl-shard
     cadence)."""
-    q = (
-        doc_stream(spark, input_dir)
-        .writeStream.foreachBatch(QualityDriftMonitor(out_dir))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = QualityDriftMonitor(out_dir)
+    return drain(
+        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("quality drift stream did not drain in time")
 
 
 def init_novelty_index(
@@ -1487,31 +1339,8 @@ class NoveltyMonitor:
             "n_docs long, n_grams long, novel_grams long, "
             "novelty_rate double, alert boolean",
         )
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                release.coalesce(1)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
-            )
-            (
-                novel.coalesce(4)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(f"{self.base}/grams")
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch(release.coalesce(1), self.out_dir, batch_id)
+        write_batch(novel.coalesce(4), f"{self.base}/grams", batch_id)
 
 
 def init_keyness_index(
@@ -1576,31 +1405,8 @@ class KeynessDriftMonitor:
             .agg(F.sum("cnt").alias("cnt"))
         )
         release = keyness_drift(batch_counts, lifetime)
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                release.coalesce(1)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
-            )
-            (
-                batch_counts.coalesce(4)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(f"{self.base}/counts")
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch(release.coalesce(1), self.out_dir, batch_id)
+        write_batch(batch_counts.coalesce(4), f"{self.base}/counts", batch_id)
 
 
 def run_keyness_monitor(
@@ -1609,20 +1415,14 @@ def run_keyness_monitor(
     base_path: str,
     out_dir: str,
     checkpoint: str,
-    timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain the document feed through the keyness-drift monitor
     (availableNow trigger)."""
-    q = (
-        doc_stream(spark, input_dir)
-        .writeStream.foreachBatch(KeynessDriftMonitor(base_path, out_dir))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = KeynessDriftMonitor(base_path, out_dir)
+    return drain(
+        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("keyness stream did not drain in time")
 
 
 def run_novelty_monitor(
@@ -1631,17 +1431,11 @@ def run_novelty_monitor(
     base_path: str,
     out_dir: str,
     checkpoint: str,
-    timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain the document feed through the novelty monitor
     (availableNow trigger)."""
-    q = (
-        doc_stream(spark, input_dir)
-        .writeStream.foreachBatch(NoveltyMonitor(base_path, out_dir))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = NoveltyMonitor(base_path, out_dir)
+    return drain(
+        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("novelty stream did not drain in time")

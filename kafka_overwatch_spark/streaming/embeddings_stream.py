@@ -19,6 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+from .state import drain, write_batch
 
 
 def emb_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -82,31 +85,8 @@ class CentroidDriftMonitor:
             )
         )
         release = centroid_drift(batch_sums, lifetime)
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                release.coalesce(1)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
-            )
-            (
-                batch_sums.coalesce(1)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(f"{self.base}/sums")
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch(release.coalesce(1), self.out_dir, batch_id)
+        write_batch(batch_sums.coalesce(1), f"{self.base}/sums", batch_id)
 
 
 def run_centroid_monitor(
@@ -115,17 +95,11 @@ def run_centroid_monitor(
     base_path: str,
     out_dir: str,
     checkpoint: str,
-    timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain the embedding feed through the centroid-drift monitor
     (availableNow trigger)."""
-    q = (
-        emb_stream(spark, input_dir)
-        .writeStream.foreachBatch(CentroidDriftMonitor(base_path, out_dir))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = CentroidDriftMonitor(base_path, out_dir)
+    return drain(
+        emb_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("centroid stream did not drain in time")

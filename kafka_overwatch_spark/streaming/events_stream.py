@@ -12,8 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .state import GenerationalState
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -22,6 +21,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from .state import GenerationalState, drain, write_batch
 
 EVENT_SCHEMA = StructType(
     [
@@ -252,23 +253,14 @@ def run_reach_sketch_stream(
     input_dir: str,
     state_dir: str,
     checkpoint: str,
-    timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain the events feed into the sketch state table
     (availableNow; production uses a processing-time trigger)."""
-    q = (
-        event_stream(spark, input_dir)
-        .writeStream.foreachBatch(ReachSketchMaintainer(state_dir))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = ReachSketchMaintainer(state_dir)
+    return drain(
+        event_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"reach-sketch drain exceeded {timeout_sec}s; state at "
-            f"{state_dir} is incomplete"
-        )
 
 
 def reach_from_sketch_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -442,29 +434,12 @@ class DpCountsRelease:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.relational import dp_noisy_counts
 
-        spark = batch_df.sparkSession
         release = dp_noisy_counts(
             batch_df,
             epsilon=self.epsilon,
             salt=f"{self.base_salt}:{batch_id}",
         ).select("event_type", "noisy_count")  # true_count NEVER leaves
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                release.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch(release, self.out_dir, batch_id)
 
 
 def run_dp_counts_stream(
@@ -473,21 +448,15 @@ def run_dp_counts_stream(
     out_dir: str,
     checkpoint: str,
     epsilon: float = 0.1,
-    timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain the events feed through the DP release (availableNow; a
     production deployment uses a processing-time trigger at the
     release cadence the ε budget was priced for)."""
-    q = (
-        event_stream(spark, input_dir)
-        .writeStream.foreachBatch(DpCountsRelease(out_dir, epsilon))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = DpCountsRelease(out_dir, epsilon)
+    return drain(
+        event_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("dp counts stream did not drain in time")
 
 
 class BenfordMonitor:
@@ -517,28 +486,10 @@ class BenfordMonitor:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.relational import benford_audit
 
-        spark = batch_df.sparkSession
         release = benford_audit(batch_df).withColumn(
             "alert", F.abs(F.col("excess")) > self.alert_excess
         )
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                release.coalesce(1)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch(release.coalesce(1), self.out_dir, batch_id)
 
 
 def benford_lifetime(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -575,21 +526,15 @@ def run_benford_stream(
     out_dir: str,
     checkpoint: str,
     alert_excess: float = 0.05,
-    timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain the events feed through the Benford monitor
     (availableNow; production uses a processing-time trigger at the
     monitoring cadence)."""
-    q = (
-        event_stream(spark, input_dir)
-        .writeStream.foreachBatch(BenfordMonitor(out_dir, alert_excess))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = BenfordMonitor(out_dir, alert_excess)
+    return drain(
+        event_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("benford stream did not drain in time")
 
 
 def init_ks_index(
@@ -651,31 +596,8 @@ class ValueDriftMonitor:
             .agg(F.sum("cnt").alias("cnt"))
         )
         release = ks_drift_counts(batch_counts, lifetime)
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                release.coalesce(1)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.out_dir)
-            )
-            (
-                batch_counts.coalesce(4)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(f"{self.base}/counts")
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch(release.coalesce(1), self.out_dir, batch_id)
+        write_batch(batch_counts.coalesce(4), f"{self.base}/counts", batch_id)
 
 
 def run_value_drift_stream(
@@ -684,17 +606,11 @@ def run_value_drift_stream(
     base_path: str,
     out_dir: str,
     checkpoint: str,
-    timeout_sec: int = 300,
-) -> None:
+) -> StreamingQuery:
     """Drain the events feed through the value-drift monitor
     (availableNow trigger)."""
-    q = (
-        event_stream(spark, input_dir)
-        .writeStream.foreachBatch(ValueDriftMonitor(base_path, out_dir))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handler = ValueDriftMonitor(base_path, out_dir)
+    return drain(
+        event_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        checkpoint,
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError("value drift stream did not drain in time")

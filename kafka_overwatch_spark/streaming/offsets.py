@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .state import drain
+
 OFFSET_SCHEMA = StructType(
     [
         StructField("cluster", StringType()),
@@ -560,20 +562,10 @@ def run_to_completion(stream_df: DataFrame, checkpoint: str) -> list:
     """Drain a stream with availableNow into an in-memory table; returns
     the collected rows (test helper)."""
     name = "stream_out_" + checkpoint.replace("/", "_").strip("_")[-32:]
-    q = (
+    drain(
         stream_df.writeStream.format("memory")
         .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        checkpoint,
     )
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            "stream did not drain within 300s — partial results would "
-            "silently weaken the assertion; failing loudly instead"
-        )
-    spark = stream_df.sparkSession
-    return spark.table(name).collect()
+    return stream_df.sparkSession.table(name).collect()

@@ -22,7 +22,7 @@ tests/test_streaming_pipeline.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from .events_stream import (
     EVENT_SCHEMA,
@@ -30,12 +30,7 @@ from .events_stream import (
     streaming_dedup_within_watermark,
     streaming_session_windows,
 )
-
-
-def _drain(q) -> None:
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("pipeline stage did not drain within 300s")
+from .state import drain
 
 
 def run_medallion(
@@ -53,30 +48,24 @@ def run_medallion(
     gold_dir = f"{base}/gold"
 
     bronze = event_stream(spark, input_dir)
-    q1 = (
+    drain(
         streaming_dedup_within_watermark(bronze, watermark=dedup_watermark)
         .writeStream.format("parquet")
-        .option("path", silver_dir)
-        .option("checkpointLocation", f"{base}/ck_silver")
-        .trigger(availableNow=True)
-        .start()
+        .option("path", silver_dir),
+        f"{base}/ck_silver",
     )
-    _drain(q1)
 
     silver_stream = (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 4)
         .parquet(silver_dir)
     )
-    q2 = (
+    drain(
         streaming_session_windows(
             silver_stream, gap=session_gap, watermark=session_watermark
         )
         .writeStream.format("parquet")
-        .option("path", gold_dir)
-        .option("checkpointLocation", f"{base}/ck_gold")
-        .trigger(availableNow=True)
-        .start()
+        .option("path", gold_dir),
+        f"{base}/ck_gold",
     )
-    _drain(q2)
     return {"silver": silver_dir, "gold": gold_dir}

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .offsets import OFFSET_SCHEMA, offset_sample_stream
+from .state import drain
 
 
 class StreamingUsageReporter:
@@ -141,16 +142,12 @@ def run_usage_report_stream(
     evaluate_every: int = 2,
     expire_after_batches: int | None = None,
 ):
-    """Wire the stream: one file per trigger (≙ one scan per interval),
-    reports every `evaluate_every` scans. Returns (query, reporter)."""
+    """Drain the stream: one file per trigger (≙ one scan per interval),
+    reports every `evaluate_every` scans. Returns the drained query and
+    the reporter."""
     reporter = StreamingUsageReporter(
         baseline, output_dir, evaluate_every, expire_after_batches
     )
     stream = offset_sample_stream(spark, input_dir)
-    q = (
-        stream.writeStream.foreachBatch(reporter)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = drain(stream.writeStream.foreachBatch(reporter), checkpoint)
     return q, reporter

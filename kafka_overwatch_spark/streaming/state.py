@@ -1,6 +1,11 @@
-"""Generational parquet state with an atomic CURRENT-pointer commit.
+"""Shared plumbing for the streaming monitors and screens.
 
-Shared by every foreachBatch handler that maintains persisted state
+``drain`` runs a configured stream to completion with availableNow and
+fails loudly on timeout; ``write_batch`` is the replay-safe per-batch
+write every foreachBatch handler appends its output with.
+
+``GenerationalState`` is parquet state with an atomic CURRENT-pointer
+commit, shared by every foreachBatch handler that maintains persisted state
 (reach sketches, CDC dimension upserts): each batch writes a fresh
 ``gen-<batch_id>`` subdirectory, then flips the ``CURRENT`` pointer file
 as the commit point. An in-place parquet overwrite has a torn-state
@@ -25,6 +30,47 @@ tests/test_events_stream.py::test_reach_sketch_state_commit_protocol.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+DRAIN_TIMEOUT_S = 300
+
+
+def drain(writer: DataStreamWriter, checkpoint: str) -> StreamingQuery:
+    """Start ``writer`` with an availableNow trigger and wait until it
+    has processed everything available. A partial drain would let the
+    caller read incomplete output, so a timeout stops the query and
+    raises instead."""
+    q = (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream with checkpoint {checkpoint} did not drain within "
+            f"{DRAIN_TIMEOUT_S}s"
+        )
+    return q
+
+
+def write_batch(
+    df: DataFrame, path: str, batch_id: int, *partition_cols: str
+) -> None:
+    """Replay-safe foreachBatch append: the rows land in the
+    ``batch_id=N`` partition (under any ``partition_cols``), which is
+    dynamically OVERWRITTEN, so a batch replayed after a crash between
+    write and checkpoint replaces its own rows instead of duplicating
+    them. Dynamic mode is a per-write option; the session conf is left
+    alone."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols, "batch_id")
+        .parquet(path)
+    )
 
 
 class GenerationalState:

@@ -19,10 +19,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
 from ..operators.relational import scd1_upsert
-from .state import GenerationalState
+from .state import GenerationalState, drain
 
 
 class Scd1DimensionMaintainer(GenerationalState):
@@ -68,23 +69,17 @@ def run_scd1_stream(
     checkpoint: str,
     keys: list[str],
     order_col: str,
-) -> None:
+) -> StreamingQuery:
     """Drain a change-feed directory (one file per trigger) through the
     maintainer with availableNow — the file-source stand-in for the
     Kafka config-changes topic."""
     maintainer = Scd1DimensionMaintainer(state_dir, keys, order_col)
-    q = (
+    stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
-        .writeStream.foreachBatch(maintainer)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("scd1 stream did not drain within 300s")
+    return drain(stream.writeStream.foreachBatch(maintainer), checkpoint)
 
 
 class HeavyHitterSketchMaintainer(GenerationalState):

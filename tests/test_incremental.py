@@ -113,7 +113,6 @@ def test_vanished_topic_expires_from_state(spark, snaps):
             evaluate_every=4,
             expire_after_batches=2,
         )
-        q.awaitTermination(300)
         assert any(t == victim for t, _ in reporter.expired_keys)
         report = json.load(
             open(sorted(glob.glob(f"{tmp}/reports/report_batch_*.json"))[-1])

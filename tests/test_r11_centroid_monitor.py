@@ -20,11 +20,26 @@ def _write(spark, path, rows):
     _embs(spark, rows).coalesce(1).write.mode("append").parquet(path)
 
 
-def test_centroid_monitor_readstream_replay_and_alert(spark, tmp_path):
+def test_centroid_monitor_readstream_replay_and_alert(
+    spark, tmp_path, monkeypatch
+):
+    from pyspark.sql.conf import RuntimeConfig
+
     from kafka_overwatch_spark.streaming.embeddings_stream import (
         init_centroid_index,
         run_centroid_monitor,
     )
+
+    # handlers must get dynamic overwrite from the write option alone,
+    # never by mutating session conf
+    conf_keys = []
+    real_set = RuntimeConfig.set
+
+    def spy_set(self, key, *args, **kwargs):
+        conf_keys.append(key)
+        return real_set(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
 
     in_dir = str(tmp_path / "in")
     base = str(tmp_path / "idx")
@@ -73,6 +88,12 @@ def test_centroid_monitor_readstream_replay_and_alert(spark, tmp_path):
         map(tuple, spark.read.parquet(f"{base}/sums").collect())
     )
     assert state_after == state_before
+    # every batch partition — the seed included — survived the re-run
+    sums = spark.read.parquet(f"{base}/sums")
+    assert {r[0] for r in sums.select("batch_id").distinct().collect()} == {
+        -1, 0, 1
+    }
+    assert not [k for k in conf_keys if "partitionOverwriteMode" in k]
 
 
 def test_centroid_monitor_release_matches_library(spark, tmp_path):

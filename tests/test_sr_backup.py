@@ -144,7 +144,6 @@ def test_streaming_two_tier_report_cadence(spark, snaps):
             f"{tmp}/reports",
             evaluate_every=2,
         )
-        q.awaitTermination(300)
         reports = sorted(glob.glob(f"{tmp}/reports/report_batch_*.json"))
         # 4 scan batches, evaluate every 2 → 2 reports
         assert len(reports) == 2
