@@ -20,19 +20,16 @@ def test_incremental_totals_match_batch(spark, snaps):
         IncrementalTopicTotals,
     )
     from kafka_overwatch_spark.streaming.offsets import offset_sample_stream
+    from kafka_overwatch_spark.streaming.state import drain
 
     with tempfile.TemporaryDirectory() as tmp:
         po = snaps["partition_offsets"]
         _write_scans(po, tmp)
         inc = IncrementalTopicTotals()
-        q = (
-            offset_sample_stream(spark, f"{tmp}/in")
-            .writeStream.foreachBatch(inc)
-            .option("checkpointLocation", f"{tmp}/ck")
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            offset_sample_stream(spark, f"{tmp}/in").writeStream.foreachBatch(inc),
+            f"{tmp}/ck",
         )
-        q.awaitTermination(300)
         got = {r["topic"]: r["cum_new"] for r in inc.totals.collect()}
         # telescoping: cumulative W1 deltas == end@final − end@scan0
         final = po.filter(F.col("scan_id") == 3).groupBy("topic").agg(

@@ -7,6 +7,8 @@ queries) — a parametrized version pays ~10 s of Spark job setup per query.
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF_DIR, compare_spark_duckdb
 
 
@@ -46,3 +48,55 @@ def test_promoted_names_all_resolve():
     missing = [n for n in registry._PROMOTED if n not in q]
     assert not missing, missing
     assert len(set(registry._PROMOTED)) == len(registry._PROMOTED)
+
+
+def test_session_memo_contract(spark, monkeypatch):
+    """Every registry memo goes through session_memo: the evictable set
+    is exactly the algorithmic artifacts, defaults share one entry, a
+    ``keep`` typo raises, and clear_session_memos pops, unpersists once,
+    reports and honours ``keep`` (pinned on toy memos, no Spark job)."""
+    from kafka_overwatch_spark import registry
+
+    evict = {n: ev for n, (_, ev) in registry._MEMOS.items()}
+    assert {n for n, ev in evict.items() if ev} == {
+        "shingle", "bands", "simhash", "phash", "edges", "lpa_graph",
+        "lpa_labels", "triangles", "ivf", "pq", "whiten", "winnow",
+        "containment_k", "containment_docs", "containment_probes",
+        "containment_capped", "neardup_bits", "dsir_bucketed",
+    }
+    assert {n for n, ev in evict.items() if not ev} == {
+        "snaps", "cluster_snaps", "topics_df", "raw_tables", "lag_rows",
+        "groups_df",
+    }
+    assert registry.get_cluster_snaps(spark, SF_DIR) is (
+        registry.get_cluster_snaps(spark, SF_DIR, "primary")
+    )
+    with pytest.raises(ValueError, match="nope"):
+        registry.clear_session_memos(spark, keep={"nope"})
+
+    class Held:
+        def __init__(self) -> None:
+            self.unpersists = 0
+
+        def unpersist(self) -> None:
+            self.unpersists += 1
+
+    monkeypatch.setattr(registry, "_MEMOS", {})
+
+    @registry.session_memo("toy")
+    def toy(spark, sf_dir):
+        return Held()
+
+    @registry.session_memo("toy_kept")
+    def toy_kept(spark, sf_dir):
+        return Held(), 3
+
+    with pytest.raises(ValueError, match="toy"):
+        registry.session_memo("toy")
+    held, kept = toy(spark, SF_DIR), toy_kept(spark, SF_DIR)
+    assert toy(spark, sf_dir=SF_DIR) is held
+    assert registry.clear_session_memos(spark, sf_dir="elsewhere") == []
+    assert registry.clear_session_memos(spark, keep={"toy_kept"}) == ["toy"]
+    assert held.unpersists == 1 and not registry._MEMOS["toy"][0]
+    assert kept[0].unpersists == 0 and toy_kept(spark, SF_DIR) is kept
+    assert toy(spark, SF_DIR) is not held

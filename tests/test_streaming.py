@@ -219,6 +219,7 @@ def test_stateful_checkpoint_recovery_across_restart(spark, snaps):
     import time
 
     from kafka_overwatch_spark.streaming import offsets as so
+    from kafka_overwatch_spark.streaming.state import drain
 
     with tempfile.TemporaryDirectory() as tmp:
         po = snaps["partition_offsets"]
@@ -241,16 +242,13 @@ def test_stateful_checkpoint_recovery_across_restart(spark, snaps):
             # parquet file sink: the recoverable sink (memory sink cannot
             # resume from a checkpoint)
             stream = so.offset_sample_stream(spark, f"{tmp}/in")
-            q = (
+            drain(
                 so.per_interval_deltas(stream)
                 .writeStream.format("parquet")
                 .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+                .outputMode("append"),
+                ckpt,
             )
-            q.awaitTermination(300)
 
         write_scan(0)
         write_scan(1)
@@ -407,6 +405,7 @@ def test_rate_limited_file_source_cadence(spark, snaps):
     from materializing the whole backlog in one batch), and the
     concatenation of batches must equal the full input."""
     from kafka_overwatch_spark.streaming import offsets as so
+    from kafka_overwatch_spark.streaming.state import drain
 
     with tempfile.TemporaryDirectory() as tmp:
         po = snaps["partition_offsets"]
@@ -422,16 +421,13 @@ def test_rate_limited_file_source_cadence(spark, snaps):
             seen.append((batch_id, batch_df.count()))
 
         stream = so.offset_sample_stream(spark, f"{tmp}/in")
-        q = (
+        drain(
             spark.readStream.schema(stream.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{tmp}/in")
-            .writeStream.foreachBatch(observe)
-            .option("checkpointLocation", f"{tmp}/ckpt_rate")
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(observe),
+            f"{tmp}/ckpt_rate",
         )
-        q.awaitTermination(300)
         total = po.filter(F.col("scan_id") < n_files).count()
         assert len(seen) == n_files, seen
         assert all(n > 0 for _, n in seen)
