@@ -23,11 +23,11 @@ from . import schema_registry as sr
 from . import usage
 
 
-def _topics_map(df: DataFrame) -> F.Column:
-    """name → partitions map (A11: ``.set_index('name').to_dict()``,
-    `reporting/topics.py:24-28`)."""
+def _topics_map(cond: F.Column) -> F.Column:
+    """name → partitions map of the rows matching ``cond`` (A11:
+    ``.set_index('name').to_dict()``, `reporting/topics.py:24-28`)."""
     return F.map_from_entries(
-        F.sort_array(F.collect_list(F.struct("name", "partitions")))
+        F.sort_array(F.collect_list(F.when(cond, F.struct("name", "partitions"))))
     )
 
 
@@ -44,16 +44,20 @@ def build_cluster_report(
     conventions override the default regexes (config-driven reports,
     `specs/config.py` governance block).
 
-    ``topics_df``: an already-cached frame (registry.get_topics_df) —
-    repeated report builds MUST pass it, or each call pins a fresh
-    cached RDD for the session lifetime (one-shot CLI use is fine
-    without)."""
-    if topics_df is None:
-        topics_df = usage.build_topics_df(snaps).cache()
-    total = topics_df.count()
+    ``topics_df``: ``usage.build_topics_df(snaps)`` when omitted; a
+    caller that builds many reports over one snapshot passes its cached
+    frame (registry.get_topics_df).
 
-    # estimated_waste.topic_categories — one struct per category
-    cat_structs = []
+    Building the frame runs no Spark job, and no count of the snapshot
+    is baked into the plan as a literal: every scan of a cluster runs
+    the same generated code."""
+    if topics_df is None:
+        topics_df = usage.build_topics_df(snaps)
+
+    # statistics.topics/partitions and every estimated_waste category in
+    # one conditional aggregation (the ``usage.waste_summary`` shape); the
+    # total each cluster_percentage divides by is an aggregate of the same
+    # pass
     descriptions = {
         "no_messages": "All the topics with no messages.",
         "no_messages_topics_with_multiple_partitions": (
@@ -65,32 +69,31 @@ def build_cluster_report(
             "messages produced during the evaluation period"
         ),
     }
+    total = F.count(F.lit(1))
+    aggs = [
+        F.count("name").alias("topics"),
+        F.coalesce(F.sum("partitions"), F.lit(0)).alias("partitions"),
+    ]
     for name, pred in usage.WASTE_PREDICATES.items():
-        cat = topics_df.filter(pred).agg(
-            _topics_map(topics_df.filter(pred)).alias("topics"),
-            F.count("name").alias("topics_count"),
-            F.coalesce(F.sum("partitions"), F.lit(0)).alias(
-                "topic_partitions_sum"
-            ),
-            F.floor((F.count("name").cast("double") / F.lit(total)) * 100).alias(
-                "cluster_percentage"
-            ),
-        )
-        cat_structs.append(
-            cat.select(
-                F.struct(
-                    "topics",
-                    "topics_count",
-                    "topic_partitions_sum",
-                    "cluster_percentage",
-                    F.lit(descriptions[name]).alias("description"),
-                ).alias(name)
-            )
+        cond = F.expr(pred)  # predicates are SQL strings shared w/ oracle
+        count = F.count(F.when(cond, F.col("name")))
+        aggs.append(
+            F.struct(
+                _topics_map(cond).alias("topics"),
+                count.alias("topics_count"),
+                F.coalesce(
+                    F.sum(F.when(cond, F.col("partitions"))), F.lit(0)
+                ).alias("topic_partitions_sum"),
+                F.floor((count.cast("double") / total) * 100).alias(
+                    "cluster_percentage"
+                ),
+                F.lit(descriptions[name]).alias("description"),
+            ).alias(name)
         )
 
-    # statistics — topic/partition counts + most_active_topics detail map
-    # + consumer-group totals (spec statistics.consumer_groups:
-    # total/active/inactive, `specs/report.json` ClusterReport.statistics)
+    # statistics — most_active_topics detail map + consumer-group totals
+    # (spec statistics.consumer_groups: total/active/inactive,
+    # `specs/report.json` ClusterReport.statistics)
     most_active = usage.most_active_topics(topics_df)
     cg_stats = usage.is_active_group(snaps["consumer_groups"]).agg(
         F.count("*").alias("total"),
@@ -99,10 +102,7 @@ def build_cluster_report(
         ).alias("active"),
     )
     stats = (
-        topics_df.agg(
-            F.count("name").alias("topics"),
-            F.coalesce(F.sum("partitions"), F.lit(0)).alias("partitions"),
-        )
+        topics_df.agg(*aggs)
         .crossJoin(
             most_active.agg(
                 F.map_from_entries(
@@ -170,21 +170,12 @@ def build_cluster_report(
         stats.select(
             F.struct(
                 "topics", "partitions", "most_active_topics", "consumer_groups"
-            ).alias("statistics")
-        )
-        .crossJoin(
-            cat_structs[0]
-            .crossJoin(cat_structs[1])
-            .crossJoin(cat_structs[2])
-            .select(
-                F.struct(
-                    F.lit(0).alias("topics"),
-                    F.lit(0).alias("partitions"),
-                    F.struct(
-                        *[F.col(n).alias(n) for n in usage.WASTE_PREDICATES]
-                    ).alias("topic_categories"),
-                ).alias("estimated_waste")
-            )
+            ).alias("statistics"),
+            F.struct(
+                F.lit(0).alias("topics"),
+                F.lit(0).alias("partitions"),
+                F.struct(*usage.WASTE_PREDICATES).alias("topic_categories"),
+            ).alias("estimated_waste"),
         )
         .crossJoin(
             gov_summary.select(

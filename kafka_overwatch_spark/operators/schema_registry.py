@@ -33,15 +33,17 @@ def unused_subjects(snaps: dict[str, DataFrame]) -> DataFrame:
 
 def registry_summary(snaps: dict[str, DataFrame]) -> DataFrame:
     """A12 scalars (`reporting/schema_registry.py:28-33`,
-    `processing/schema_registries.py:146-157`)."""
-    subjects_count = snaps["subjects"].count()
-    schemas_count = snaps["schemas"].count()
-    versions_count = snaps["subject_versions"].count()
-    return unused_subjects(snaps).agg(
-        F.lit(subjects_count).cast("long").alias("subjects_count"),
-        F.lit(schemas_count).cast("long").alias("schemas_count"),
-        F.lit(versions_count).cast("long").alias("versions_count"),
-        F.count("*").alias("unused_subjects_count"),
+    `processing/schema_registries.py:146-157`): one single-row count
+    aggregate per frame, cross-joined — lazy, and no count is baked into
+    the plan as a literal."""
+    def count(df: DataFrame, name: str) -> DataFrame:
+        return df.agg(F.count("*").alias(name))
+
+    return (
+        count(snaps["subjects"], "subjects_count")
+        .crossJoin(count(snaps["schemas"], "schemas_count"))
+        .crossJoin(count(snaps["subject_versions"], "versions_count"))
+        .crossJoin(count(unused_subjects(snaps), "unused_subjects_count"))
     )
 
 

@@ -9,6 +9,17 @@ Defaults are chosen for correctness-at-scale first:
   (the DuckDB oracle is TZ-naive).
 - shuffle partitions default to 32 locally; on a real cluster leave it to
   AQE + ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``.
+- ``spark.sql.codegen.cache.maxEntries=1000``: the JVM-wide cache of
+  compiled generated classes. One report cycle (usage, lag, governance,
+  registry, window and metrics layers) needs ~265 distinct classes; at
+  Spark's default of 100 the cache thrashed and every cycle recompiled
+  ~237 of them. 300 still thrashed. The conf is static: it takes effect
+  only when set before the first session starts.
+- ``spark.sql.codegen.useIdInClassName=false``: AQE numbers whole-stage
+  codegen stages in the order it plans them at run time, which varies
+  from run to run; with the number in the class name the same stage
+  compiled again as a "new" class under another number (up to 20
+  extra compiles per repeated report at sf0.001).
 """
 
 from __future__ import annotations
@@ -16,6 +27,38 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The tuning every session gets through ``builder``, including scripts
+# that need a builder of their own (e.g. with the UI on).
+SPARK_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    "spark.sql.codegen.useIdInClassName": "false",
+    "spark.ui.enabled": "false",
+}
+
+
+def builder(
+    app_name: str = "kafka-overwatch-spark",
+    shuffle_partitions: int | None = None,
+) -> SparkSession.Builder:
+    """A session builder with ``SPARK_CONF`` and the environment's
+    master, shuffle partitions and driver memory applied."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    return (
+        SparkSession.builder.appName(app_name)
+        .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
+        .config(map=SPARK_CONF)
+        .config(
+            "spark.sql.shuffle.partitions",
+            str(shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))),
+        )
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+    )
 
 
 def get_spark(
@@ -25,23 +68,7 @@ def get_spark(
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))),
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
-    return builder.getOrCreate()
+    return builder(app_name, shuffle_partitions).getOrCreate()
 
 
 def warm_python_workers(spark: SparkSession) -> None:

@@ -35,26 +35,11 @@ def main() -> None:
     names = sys.argv[2:] or ["dedup_minhash_lsh"]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from pyspark.sql import SparkSession
-
     from kafka_overwatch_spark import registry
+    from kafka_overwatch_spark.session import builder
 
-    # the probe needs the REST API; the normal session disables the UI —
-    # mirror kafka_overwatch_spark.session.get_spark, UI on
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("minhash-probe")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
-    )
+    # the probe needs the REST API: the engine's own session tuning, UI on
+    spark = builder("minhash-probe").config("spark.ui.enabled", "true").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     base = f"http://localhost:{spark.sparkContext.uiWebUrl.rsplit(':', 1)[-1]}"
     app_id = spark.sparkContext.applicationId

@@ -748,3 +748,64 @@ def test_kruskal_wallis_no_global_sort_window(spark, snaps):
     # bare value order instead
     assert "windowspecdefinition(_egc_pid" in plan
     assert "windowspecdefinition(value" not in plan
+
+
+def _compiles(spark) -> int:
+    """Classes compiled in this JVM so far; a codegen-cache hit does not
+    count."""
+    return (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount()
+    )
+
+
+def test_report_cycle_compiles_nothing_new(spark, snaps):
+    """A repeated report compiles no class, and neither does a report over
+    a snapshot with other counts: the codegen cache holds the report's
+    working set, and no per-scan count is baked into generated code."""
+    from kafka_overwatch_spark import registry
+    from kafka_overwatch_spark.operators import report as reportops
+
+    sf = "/root/testdata/sf0.001"
+
+    def force(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    q = registry.spark_queries()["cluster_report_scalars"]
+    force(q(spark, sf))
+    before = _compiles(spark)
+    force(q(spark, sf))
+    assert _compiles(spark) - before == 0
+
+    # 'analytics' has other topic counts than 'primary' (15 vs 65 at
+    # sf0.001); these counts also build its cached topics frame before
+    # the measured report
+    other = registry.get_cluster_snaps(spark, sf, "analytics")
+    other_topics = registry.get_topics_df(spark, sf, "analytics")
+    assert other_topics.count() != registry.get_topics_df(spark, sf).count()
+    before = _compiles(spark)
+    force(reportops.cluster_report_scalars(
+        other, "analytics", topics_df=other_topics))
+    assert _compiles(spark) - before == 0
+
+
+def test_report_and_sr_summary_build_without_jobs(spark, snaps):
+    """Building the report or the registered sr_summary submits no Spark
+    job: every count is an aggregate column of the plan."""
+    from kafka_overwatch_spark import registry
+    from kafka_overwatch_spark.operators import report as reportops
+
+    sf = "/root/testdata/sf0.001"
+    sc = spark.sparkContext
+    cluster_snaps = registry.get_cluster_snaps(spark, sf)
+    topics_df = registry.get_topics_df(spark, sf)
+    sr_summary = registry.spark_queries()["sr_summary"]
+
+    def jobs() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = jobs()
+    reportops.cluster_report_scalars(cluster_snaps, topics_df=topics_df)
+    sr_summary(spark, sf)
+    assert jobs() - before == set()

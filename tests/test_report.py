@@ -144,3 +144,37 @@ def test_report_new_sections(spark, snaps):
     est = payload["schema_registry"]["schemas_estimates"]
     assert est["detected_unused_count"] == len(est["detected_unused"]) > 0
     assert payload["metadata"]["timestamp"]
+
+
+def test_report_json_leaves_no_cached_frame(spark, snaps):
+    from kafka_overwatch_spark.operators.report import report_json
+
+    def pinned() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    # a snapshot no other test reports on: caching a plan identical to an
+    # already cached one pins nothing new, which would hide a leak
+    fresh = dict(
+        snaps, partition_offsets=snaps["partition_offsets"].filter("scan_id >= 0")
+    )
+    before = pinned()
+    report_json(fresh)
+    assert pinned() == before
+
+
+def test_report_over_empty_topics_raises_divide_by_zero(spark, snaps):
+    """Every cluster_percentage divides by the topic total; an empty total
+    fails loudly under ANSI instead of reporting a percentage."""
+    import pytest
+
+    from kafka_overwatch_spark import registry
+    from kafka_overwatch_spark.operators.report import cluster_report_scalars
+
+    sf = "/root/testdata/sf0.001"
+    empty = registry.get_topics_df(spark, sf).limit(0)
+    # AQE may wrap the error when several stages fail at once, so match
+    # the error class anywhere in the message
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        cluster_report_scalars(
+            registry.get_cluster_snaps(spark, sf), topics_df=empty
+        ).collect()
