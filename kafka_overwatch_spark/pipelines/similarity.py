@@ -21,11 +21,20 @@ Scale design (100 TB of embeddings):
 
 Cosines are double-precision with fixed fold order (see dedup.cosine) —
 bit-stable vs the DuckDB oracle.
+
+Every numpy body shares one set of private kernels: ``_decode`` (an
+embedding column or collected Rows → float64 matrix), ``_unit`` (the
+one normalize policy, norms floored at 1e-12 so a zero vector scores
+0.0), ``_normalized_corpus`` (collect ids + unit matrix),
+``_sign_map``/``_pack_signs`` (the hyperplane sign GEMM and its bucket
+packing), ``_bucket_groups`` (bucket-sorted batches → collision groups,
+holding back the batch-straddling tail), and for PQ ``_adc_tables``,
+``_pq_unpack``, ``_pq_pack`` and ``_exact_rerank``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -92,47 +101,7 @@ def brute_force_topk(
             F.round(cosine(F.col("q_emb"), F.col("emb")), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
-
-
-def lsh_neighbor_pairs(
-    embeddings: DataFrame, threshold: float = 0.3, bits: int = LSH_BITS
-) -> DataFrame:
-    """LSH-accelerated neighbor pairs: candidates share a sign bucket,
-    verified by exact cosine ≥ threshold. The scale path — the self-join
-    shuffles on bucket only (256 buckets here; at 100 TB use 16-24 bits
-    plus multiple tables for recall)."""
-    tagged = spread(embeddings).select(
-        "vec_id", "embedding", lsh_bucket(F.col("embedding"), bits).alias("bucket")
-    )
-    a = tagged.select(
-        F.col("bucket"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("emb_a"),
-    )
-    b = tagged.select(
-        F.col("bucket"),
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("emb_b"),
-    )
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "bucket",
-            "vec_a",
-            "vec_b",
-            F.round(cosine(F.col("emb_a"), F.col("emb_b")), 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -147,10 +116,10 @@ def lsh_neighbor_pairs(
 #
 # At 100 TB the broadcast side no longer fits — the same mapInPandas body
 # then runs per (LSH bucket | IVF cell) with bucket-local matrices, which
-# is exactly lsh_neighbor_pairs' join shape.
+# is exactly embedding_neardup_pairs_lsh's shape.
 # ---------------------------------------------------------------------------
 
-from typing import Iterator  # noqa: E402
+from typing import Callable, Iterator  # noqa: E402
 
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
@@ -189,12 +158,48 @@ TOPK_SCORE_SCHEMA = StructType(
 )
 
 
-def _normalized_corpus(embeddings: DataFrame):
-    rows = embeddings.select("vec_id", "embedding").collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    mat = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    return ids, mat
+def _decode(vectors) -> np.ndarray:
+    """float64 matrix of an ``embedding`` column — a pandas Series of
+    Arrow float32 arrays, or the embedding lists of collected Rows. One
+    ``np.stack``: widening float32 to float64 is exact, so this is
+    bit-equal to a per-coordinate decode. An empty input is a
+    0 × EMB_DIM matrix."""
+    if len(vectors) == 0:
+        return np.empty((0, EMB_DIM))
+    return np.stack(vectors).astype(np.float64)
+
+
+def _unit(m: np.ndarray) -> np.ndarray:
+    """Row-normalized copy of ``m`` — the one normalize policy. Norms
+    are floored at 1e-12, so an all-zero row stays zero (cosine 0.0)
+    instead of NaN."""
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+
+
+def _normalized_corpus(embeddings: DataFrame, *extra: str) -> tuple:
+    """Driver collect of (vec_id, *extra, embedding): the vec_id and
+    each ``extra`` column as int64 arrays, then the unit-row matrix."""
+    rows = embeddings.select("vec_id", *extra, "embedding").collect()
+    cols = [
+        np.array([r[c] for r in rows], dtype=np.int64)
+        for c in ("vec_id", *extra)
+    ]
+    return (*cols, _unit(_decode([r["embedding"] for r in rows])))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The family's deterministic per-query rank: round-6 cosine desc,
+    vec_id tie-break; keeps ranks ≤ k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank")
+        )
+    )
 
 
 def embedding_neardup_pairs_vectorized(
@@ -220,8 +225,7 @@ def embedding_neardup_pairs_vectorized(
             if pdf.empty:
                 continue
             bids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mb = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            mb /= np.linalg.norm(mb, axis=1, keepdims=True)
+            mb = _unit(_decode(pdf["embedding"]))
             cos = np.round(mb @ all_mat.T, 6)
             ai, bj = np.nonzero(cos >= threshold)
             va, vb = bids[ai], all_ids[bj]
@@ -253,8 +257,7 @@ def brute_force_topk_vectorized(
             if pdf.empty:
                 continue
             bids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mb = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            mb /= np.linalg.norm(mb, axis=1, keepdims=True)
+            mb = _unit(_decode(pdf["embedding"]))
             cos = np.round(mb @ all_qmat.T, 6)  # n_corpus × n_queries
             n, nq = cos.shape
             qi = np.repeat(all_qids[np.newaxis, :], n, axis=0).ravel()
@@ -268,16 +271,7 @@ def brute_force_topk_vectorized(
     scored = _spread_gemm(embeddings.select("vec_id", "embedding")).mapInPandas(
         block, TOPK_SCORE_SCHEMA
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank")
-        )
-    )
+    return _top_k(scored, k)
 
 
 def _plane_matrix(n_planes: int = LSH_BITS, dim: int = EMB_DIM) -> np.ndarray:
@@ -298,147 +292,104 @@ def _plane_matrix(n_planes: int = LSH_BITS, dim: int = EMB_DIM) -> np.ndarray:
     return w
 
 
-BUCKET_SCHEMA = StructType(
-    [StructField("vec_id", LongType()), StructField("bucket", LongType())]
-)
-
-
-def lsh_bucket_assignments_vectorized(
-    embeddings: DataFrame, bits: int = LSH_BITS
+def _sign_map(
+    embeddings: DataFrame,
+    n_planes: int,
+    emit: Callable[[pd.DataFrame, np.ndarray], pd.DataFrame],
+    schema: StructType,
 ) -> DataFrame:
-    """Vectorized bucket assignment: one dgemm against the plane matrix
-    per Arrow batch instead of bits×dim interpreted lambda ops per row."""
+    """One sign GEMM per Arrow batch of (vec_id, embedding) against the
+    first ``n_planes`` hyperplanes (broadcast); ``emit(pdf, signs)``
+    turns the batch and its n × n_planes sign matrix into the output
+    frame."""
     sc = embeddings.sparkSession.sparkContext
-    b_planes = sc.broadcast(_plane_matrix(bits, EMB_DIM))
-    powers = np.power(2, np.arange(bits)).astype(np.int64)
+    b_planes = sc.broadcast(_plane_matrix(n_planes, EMB_DIM))
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         planes = b_planes.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            signs = (m @ planes.T) > 0  # n×bits
-            buckets = (signs * powers).sum(axis=1).astype(np.int64)
-            yield pd.DataFrame({"vec_id": ids, "bucket": buckets})
+            yield emit(pdf, (_decode(pdf["embedding"]) @ planes.T) > 0)
 
-    return _spread_gemm(embeddings.select("vec_id", "embedding")).mapInPandas(
-        assign, BUCKET_SCHEMA
+    return _spread_gemm(
+        embeddings.select("vec_id", "embedding")
+    ).mapInPandas(assign, schema)
+
+
+def _pack_signs(
+    signs: np.ndarray, bits: int, tables: int = 1, offset: int = 0
+) -> np.ndarray:
+    """n × tables int64 buckets: table t packs sign columns
+    offset+t·bits … offset+t·bits+bits−1 little-endian (bit j ↦ 2^j),
+    the lsh_bucket / oracle convention."""
+    block = signs[:, offset : offset + bits * tables]
+    powers = 1 << np.arange(bits, dtype=np.int64)
+    return (block.reshape(len(signs), tables, bits) * powers).sum(axis=2)
+
+
+def _table_frame(
+    pdf: pd.DataFrame, signs: np.ndarray, bits: int, tables: int
+) -> pd.DataFrame:
+    """(vec_id, tbl, bucket) rows of one batch, table-major: every
+    vector's table-0 bucket, then table 1, …"""
+    n = len(pdf)
+    return pd.DataFrame(
+        {
+            "vec_id": np.tile(pdf["vec_id"].to_numpy(dtype=np.int64), tables),
+            "tbl": np.repeat(np.arange(tables, dtype=np.int64), n),
+            "bucket": _pack_signs(signs, bits, tables).T.ravel(),
+        }
+    )
+
+
+def _bucket_groups(
+    batches: Iterator[pd.DataFrame], keys: list[str]
+) -> Iterator[pd.DataFrame]:
+    """Groups of ≥ 2 rows sharing ``keys`` from batches sorted on
+    ``keys`` — singletons (most LSH buckets) drop wholesale. Arrow
+    batches split a partition at arbitrary rows, so each batch's
+    trailing group is held back until its key changes."""
+    pending: pd.DataFrame | None = None
+    for pdf in batches:
+        if pending is not None:
+            pdf = pd.concat([pending, pdf], ignore_index=True)
+            pending = None
+        if pdf.empty:
+            continue
+        tail = np.logical_and.reduce(
+            [pdf[c] == pdf[c].iloc[-1] for c in keys]
+        )
+        pending = pdf[tail]
+        head = pdf[~tail]
+        if head.empty:
+            continue
+        sizes = head.groupby(keys)["vec_id"].transform("size")
+        for _, grp in head[sizes >= 2].groupby(keys, sort=False):
+            yield grp
+    if pending is not None and len(pending) >= 2:
+        yield pending
+
+
+def lsh_bucket_assignments_vectorized(
+    embeddings: DataFrame, bits: int = LSH_BITS
+) -> DataFrame:
+    """Vectorized bucket assignment: one dgemm against the plane matrix
+    per Arrow batch instead of bits×dim interpreted lambda ops per row
+    (the one-table multi_table_buckets)."""
+    return multi_table_buckets(embeddings, bits, tables=1).select(
+        "vec_id", "bucket"
     )
 
 
 def lsh_neighbor_pairs_vectorized(
     embeddings: DataFrame, threshold: float = 0.3, bits: int = LSH_BITS
 ) -> DataFrame:
-    """LSH pairs with vectorized bucket assignment + bucket-local GEMM
-    verify at PARTITION grain (r7, mirroring the r6
-    `embedding_neardup_pairs_lsh` fix): most buckets are singletons, and
-    per-bucket ``applyInPandas`` pays a pandas invocation per bucket —
-    partition-grain ``mapInPandas`` over bucket-sorted rows drops
-    singletons wholesale and GEMMs only true collision groups. This is
-    the shape that replaces the global broadcast at 100 TB."""
-    sc = embeddings.sparkSession.sparkContext
-    b_planes = sc.broadcast(_plane_matrix(bits, EMB_DIM))
-    powers = np.power(2, np.arange(bits)).astype(np.int64)
-
-    carry_schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("bucket", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-        ]
-    )
-
-    def assign_carry(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # carry the vectors WITH the assignment (same fusion as
-        # embedding_neardup_pairs_lsh): the verify groupBy becomes the
-        # only shuffle instead of assign→join-back→bucket exchange
-        planes = b_planes.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            signs = (m @ planes.T) > 0
-            yield pd.DataFrame(
-                {
-                    "vec_id": ids,
-                    "bucket": (signs * powers).sum(axis=1).astype(np.int64),
-                    "embedding": pdf["embedding"].to_numpy(),
-                }
-            )
-
-    assigned = _spread_gemm(
-        embeddings.select("vec_id", "embedding")
-    ).mapInPandas(assign_carry, carry_schema)
-
-    out_schema = StructType(
-        [
-            StructField("bucket", LongType()),
-            StructField("vec_a", LongType()),
-            StructField("vec_b", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def _verify(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        if len(pdf) < 2:
-            return None
-        bucket = int(pdf["bucket"].iloc[0])
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        m = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        cos = np.round(m @ m.T, 6)
-        ai, bj = np.nonzero(cos >= threshold)
-        mask = ids[ai] < ids[bj]
-        if not mask.any():
-            return None
-        return pd.DataFrame(
-            {
-                "bucket": bucket,
-                "vec_a": ids[ai][mask],
-                "vec_b": ids[bj][mask],
-                "cosine": cos[ai, bj][mask],
-            }
-        )
-
-    def verify_partition(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        # rows arrive bucket-sorted within the partition; the trailing
-        # (possibly batch-straddling) bucket is buffered until its key
-        # changes, since Arrow batches split partitions at arbitrary
-        # row boundaries
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if pdf.empty:
-                continue
-            tail = pdf["bucket"] == pdf["bucket"].iloc[-1]
-            pending = pdf[tail]
-            head = pdf[~tail]
-            if head.empty:
-                continue
-            sizes = head.groupby("bucket")["vec_id"].transform("size")
-            head = head[sizes >= 2]
-            for _, grp in head.groupby("bucket", sort=False):
-                out = _verify(grp)
-                if out is not None:
-                    yield out
-        if pending is not None and len(pending) >= 2:
-            out = _verify(pending)
-            if out is not None:
-                yield out
-
-    n_part = shuffle_partitions(embeddings.sparkSession)
-    return (
-        assigned.repartition(n_part, "bucket")
-        .sortWithinPartitions("bucket")
-        .mapInPandas(verify_partition, out_schema)
-    )
+    """Single-table LSH pairs (bucket, vec_a, vec_b, cosine): the
+    one-table case of embedding_neardup_pairs_lsh's bucket-local GEMM
+    verify, keeping the bucket each pair shares. This is the shape that
+    replaces the global broadcast at 100 TB."""
+    return _lsh_bucket_pairs(embeddings, threshold, bits, tables=1)
 
 
 # ---------------------------------------------------------------------------
@@ -630,10 +581,27 @@ def embedding_neardup_pairs_lsh(
     bucket, DISTINCT across tables. No driver-side corpus collect —
     contrast embedding_neardup_pairs_vectorized (all-pairs verifier,
     small-N only)."""
-    sc = embeddings.sparkSession.sparkContext
-    b_planes = sc.broadcast(_plane_matrix(bits * tables, EMB_DIM))
-    powers = np.power(2, np.arange(bits)).astype(np.int64)
+    return (
+        _lsh_bucket_pairs(embeddings, threshold, bits, tables)
+        .select("vec_a", "vec_b", "cosine")
+        .distinct()
+    )
 
+
+def _lsh_bucket_pairs(
+    embeddings: DataFrame, threshold: float, bits: int, tables: int
+) -> DataFrame:
+    """(bucket, vec_a, vec_b, cosine) for every pair sharing a (tbl,
+    bucket), verified by exact round-6 cosine ≥ threshold — once per
+    shared table.
+
+    The assign pass emits the vectors WITH their buckets, so the
+    (tbl, bucket) exchange is the only shuffle (an assign → join-back
+    plan re-shuffles every vector twice). Verify runs at PARTITION
+    grain over (tbl, bucket)-sorted rows: most buckets are singletons,
+    and per-bucket applyInPandas would pay a pandas invocation for
+    each; _bucket_groups drops them wholesale and only true collision
+    groups reach the GEMM."""
     assign_schema = StructType(
         [
             StructField("vec_id", LongType()),
@@ -643,103 +611,39 @@ def embedding_neardup_pairs_lsh(
         ]
     )
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # the batch already holds the vectors — emit them WITH the bucket
-        # assignment so the verify groupBy is the ONLY shuffle (the
-        # previous assign→join-back plan re-shuffled every vector twice:
-        # once for the id join, once for the bucket exchange)
-        planes = b_planes.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            signs = (m @ planes.T) > 0  # n × (tables*bits)
-            frames = []
-            for t in range(tables):
-                chunk = signs[:, t * bits : (t + 1) * bits]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": ids,
-                            "tbl": np.full(len(ids), t, dtype=np.int64),
-                            "bucket": (chunk * powers)
-                            .sum(axis=1)
-                            .astype(np.int64),
-                            "embedding": pdf["embedding"].to_numpy(),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    assigned = _spread_gemm(
-        embeddings.select("vec_id", "embedding")
-    ).mapInPandas(assign, assign_schema)
-
-    def _verify_block(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        """Exact cosine verify of ONE bucket's rows."""
-        if len(pdf) < 2:
-            return None
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        m = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        cos = np.round(m @ m.T, 6)
-        ai, bj = np.nonzero(cos >= threshold)
-        mask = ids[ai] < ids[bj]
-        if not mask.any():
-            return None
-        return pd.DataFrame(
-            {
-                "vec_a": ids[ai][mask],
-                "vec_b": ids[bj][mask],
-                "cosine": cos[ai, bj][mask],
-            }
+    def carry(pdf: pd.DataFrame, signs: np.ndarray) -> pd.DataFrame:
+        return _table_frame(pdf, signs, bits, tables).assign(
+            embedding=np.tile(pdf["embedding"].to_numpy(), tables)
         )
 
-    def verify_partition(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        """Bucket verify at PARTITION grain: most LSH buckets are
-        singletons, and applyInPandas pays a pandas invocation per
-        bucket — thousands of near-empty calls. Rows arrive sorted by
-        (tbl, bucket) within the partition, so one python call can
-        drop singleton buckets wholesale and GEMM only the true
-        collision groups; the trailing (possibly batch-straddling)
-        bucket is buffered until its key changes (Arrow batches split
-        partitions at arbitrary row boundaries)."""
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if pdf.empty:
-                continue
-            last_tbl = pdf["tbl"].iloc[-1]
-            last_bkt = pdf["bucket"].iloc[-1]
-            tail = (pdf["tbl"] == last_tbl) & (pdf["bucket"] == last_bkt)
-            pending = pdf[tail]
-            head = pdf[~tail]
-            if head.empty:
-                continue
-            sizes = head.groupby(["tbl", "bucket"])["vec_id"].transform(
-                "size"
-            )
-            head = head[sizes >= 2]
-            for _, grp in head.groupby(["tbl", "bucket"], sort=False):
-                out = _verify_block(grp)
-                if out is not None:
-                    yield out
-        if pending is not None and len(pending) >= 2:
-            out = _verify_block(pending)
-            if out is not None:
-                yield out
+    assigned = _sign_map(embeddings, bits * tables, carry, assign_schema)
+
+    out_schema = StructType(
+        [StructField("bucket", LongType())] + PAIR_SCHEMA.fields
+    )
+
+    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for grp in _bucket_groups(batches, ["tbl", "bucket"]):
+            ids = grp["vec_id"].to_numpy(dtype=np.int64)
+            m = _unit(_decode(grp["embedding"]))
+            cos = np.round(m @ m.T, 6)
+            ai, bj = np.nonzero(cos >= threshold)
+            mask = ids[ai] < ids[bj]
+            if mask.any():
+                yield pd.DataFrame(
+                    {
+                        "bucket": int(grp["bucket"].iloc[0]),
+                        "vec_a": ids[ai][mask],
+                        "vec_b": ids[bj][mask],
+                        "cosine": cos[ai, bj][mask],
+                    }
+                )
 
     n_part = shuffle_partitions(embeddings.sparkSession)
     return (
         assigned.repartition(n_part, "tbl", "bucket")
         .sortWithinPartitions("tbl", "bucket")
-        .mapInPandas(verify_partition, PAIR_SCHEMA)
-        .distinct()
+        .mapInPandas(verify, out_schema)
     )
 
 
@@ -790,13 +694,59 @@ def _resolve_trained(
     return trained
 
 
+def _raw_centers(model) -> np.ndarray:
+    return np.array([np.asarray(c) for c in model.clusterCenters()])
+
+
 def _normalized_centers(model) -> np.ndarray:
     """Unit-norm centroid matrix of a fitted KMeans model (shared by the
     probe path and the cluster rollup)."""
-    centers = np.array([np.asarray(c) for c in model.clusterCenters()])
-    return centers / np.maximum(
-        np.linalg.norm(centers, axis=1, keepdims=True), 1e-12
+    return _unit(_raw_centers(model))
+
+
+def _probe_frame(
+    spark: SparkSession,
+    model,
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
+    n_probe: int,
+) -> DataFrame:
+    """(query_id, cell) for each query's n_probe nearest unit centroids
+    (queries are small: driver-side vs the broadcast model)."""
+    probes = np.argsort(-(q_mat @ _normalized_centers(model).T), axis=1)[
+        :, :n_probe
+    ]
+    return spark.createDataFrame(
+        [(int(q), int(c)) for q, row in zip(q_ids, probes) for c in row],
+        ["query_id", "cell"],
     )
+
+
+def _query_cosines(
+    frame: DataFrame, q_ids: np.ndarray, q_mat: np.ndarray
+) -> DataFrame:
+    """Exact round-6 cosine of each (query_id, vec_id, embedding) row
+    of ``frame`` against its query's unit vector (broadcast); self
+    pairs dropped. Output: query_id, vec_id, cosine."""
+    b_q = frame.sparkSession.sparkContext.broadcast((q_ids, q_mat))
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        all_q, all_qmat = b_q.value
+        qpos = {int(q): i for i, q in enumerate(all_q)}
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            m = _unit(_decode(pdf["embedding"]))
+            qi = pdf["query_id"].to_numpy(dtype=np.int64)
+            rows_q = all_qmat[[qpos[int(q)] for q in qi]]
+            cos = np.round((m * rows_q).sum(axis=1), 6)
+            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
+            mask = vid != qi
+            yield pd.DataFrame(
+                {"query_id": qi[mask], "vec_id": vid[mask], "cosine": cos[mask]}
+            )
+
+    return frame.mapInPandas(score, TOPK_SCORE_SCHEMA)
 
 
 def ivf_topk(
@@ -814,59 +764,16 @@ def ivf_topk(
     (registry.get_ivf) — training is the dominant cost and the model
     serves every probe depth and the cluster rollup alike."""
     model, assigned = _resolve_trained(trained, embeddings, n_cells, seed)
-    centers_n = _normalized_centers(model)
-    sc = embeddings.sparkSession.sparkContext
-
-    # probe cells per query (queries are small: driver-side vs broadcast)
-    q_rows = embeddings.filter(F.col("vec_id").isin(*query_ids)).select(
-        "vec_id", "embedding"
-    ).collect()
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([list(r["embedding"]) for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    cell_sims = q_mat @ centers_n.T
-    probes = np.argsort(-cell_sims, axis=1)[:, :n_probe]
-
-    probe_rows = [
-        (int(q_ids[i]), int(c)) for i in range(len(q_ids)) for c in probes[i]
-    ]
-    spark = embeddings.sparkSession
-    probe_df = spark.createDataFrame(probe_rows, ["query_id", "cell"])
-
-    b_qids, b_qmat = sc.broadcast(q_ids), sc.broadcast(q_mat)
-
+    q_ids, q_mat = _normalized_corpus(
+        embeddings.filter(F.col("vec_id").isin(*query_ids))
+    )
+    probe_df = _probe_frame(
+        embeddings.sparkSession, model, q_ids, q_mat, n_probe
+    )
     corpus = assigned.join(
         embeddings.select("vec_id", "embedding"), "vec_id"
     ).join(F.broadcast(probe_df), "cell")
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_qids, all_qmat = b_qids.value, b_qmat.value
-        qpos = {int(q): i for i, q in enumerate(all_qids)}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
-            qi = pdf["query_id"].to_numpy(dtype=np.int64)
-            rows_q = all_qmat[[qpos[int(q)] for q in qi]]
-            cos = np.round((m * rows_q).sum(axis=1), 6)
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mask = vid != qi
-            yield pd.DataFrame(
-                {"query_id": qi[mask], "vec_id": vid[mask], "cosine": cos[mask]}
-            )
-
-    scored = corpus.mapInPandas(score, TOPK_SCORE_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank")
-        )
-    )
+    return _top_k(_query_cosines(corpus, q_ids, q_mat), k)
 
 
 def kmeans_cluster_summary(
@@ -898,10 +805,7 @@ def kmeans_cluster_summary(
         for pdf in batches:
             if pdf.empty:
                 continue
-            m = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            m /= np.maximum(
-                np.linalg.norm(m, axis=1, keepdims=True), 1e-12
-            )
+            m = _unit(_decode(pdf["embedding"]))
             cells = pdf["cell"].to_numpy(dtype=np.int64)
             cos = (m * cn[cells]).sum(axis=1)
             yield pd.DataFrame({"cell": cells, "cosine": cos})
@@ -1027,6 +931,76 @@ def _lloyd(X: np.ndarray, k: int, seed: int, iters: int = 20) -> np.ndarray:
     return centers
 
 
+def _pq_sample(embeddings: DataFrame, sample: int) -> np.ndarray:
+    """The codebook training set: the ``sample`` vectors with the
+    smallest md5("pq:" + vec_id) — deterministic across
+    engines/partitionings (same argument as sampling.hash_bucket), and
+    a BOUNDED driver collect. Raw float64 matrix."""
+    rows = (
+        embeddings.select("vec_id", "embedding")
+        .orderBy(F.md5(F.concat(F.lit("pq:"), F.col("vec_id").cast("string"))))
+        .limit(sample)
+        .collect()
+    )
+    return _decode([r["embedding"] for r in rows])
+
+
+def _train_codebooks(X: np.ndarray, m: int, k: int, seed: int) -> np.ndarray:
+    """(m, k, EMB_DIM//m): one seeded Lloyd run per subspace of ``X``."""
+    sub = EMB_DIM // m
+    return np.stack(
+        [
+            _lloyd(X[:, i * sub : (i + 1) * sub], k, seed + i)
+            for i in range(m)
+        ]
+    )
+
+
+def _pq_pack(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Packed int64 PQ code per row of ``x``: per subspace i, the
+    nearest centroid of books[i] (argmin over |c|² − 2x·c; |x|² is
+    constant per row) in bits 8i … 8i+7."""
+    m, _, sub = books.shape
+    packed = np.zeros(len(x), dtype=np.int64)
+    for i in range(m):
+        d2 = (books[i] * books[i]).sum(1) - 2.0 * (
+            x[:, i * sub : (i + 1) * sub] @ books[i].T
+        )
+        packed |= d2.argmin(1).astype(np.int64) << (8 * i)
+    return packed
+
+
+def _pq_unpack(code: np.ndarray, m: int) -> np.ndarray:
+    """n × m centroid indices of packed PQ codes."""
+    return np.stack([(code >> (8 * i)) & 0xFF for i in range(m)], axis=1)
+
+
+def _adc_tables(q_mat: np.ndarray, cb: np.ndarray) -> np.ndarray:
+    """ADC lookup tables: tables[q, i, j] = q_subᵢ · C[i, j]."""
+    m, _, sub = cb.shape
+    return np.stack(
+        [q_mat[:, i * sub : (i + 1) * sub] @ cb[i].T for i in range(m)],
+        axis=1,
+    )
+
+
+def _exact_rerank(
+    embeddings: DataFrame,
+    adc_scored: DataFrame,
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
+    k: int,
+    rerank: int,
+) -> DataFrame:
+    """The retrieve-then-rerank tail of every PQ path: keep the
+    rerank×k best ADC scores per query, join only that shortlist back
+    to the raw vectors for exact cosine, and rank the top k — the exact
+    math touches k×rerank×|queries| rows regardless of corpus size."""
+    shortlist = _top_k(adc_scored, k * rerank).select("query_id", "vec_id")
+    exact = shortlist.join(embeddings.select("vec_id", "embedding"), "vec_id")
+    return _top_k(_query_cosines(exact, q_ids, q_mat), k)
+
+
 def pq_train(
     embeddings: DataFrame,
     m: int = PQ_M,
@@ -1034,28 +1008,14 @@ def pq_train(
     seed: int = PQ_SEED,
     sample: int = PQ_TRAIN_SAMPLE,
 ) -> np.ndarray:
-    """Train PQ codebooks: (m, k, EMB_DIM//m). The training set is the
-    ``sample`` vec_ids with the smallest md5 hash — deterministic across
-    engines/partitionings (same argument as sampling.hash_bucket), and a
-    BOUNDED driver collect (a distribution sample, never corpus-sized).
+    """Train PQ codebooks: (m, k, EMB_DIM//m) over the bounded
+    md5-ordered sample (a distribution sample, never corpus-sized).
     Vectors are unit-normalized first so ADC dot-table sums approximate
     cosine directly."""
     if EMB_DIM % m:
         raise ValueError(f"EMB_DIM={EMB_DIM} not divisible by m={m}")
-    rows = (
-        embeddings.select("vec_id", "embedding")
-        .orderBy(F.md5(F.concat(F.lit("pq:"), F.col("vec_id").cast("string"))))
-        .limit(sample)
-        .collect()
-    )
-    mat = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-    sub = EMB_DIM // m
-    return np.stack(
-        [
-            _lloyd(mat[:, i * sub : (i + 1) * sub], k, seed + i)
-            for i in range(m)
-        ]
+    return _train_codebooks(
+        _unit(_pq_sample(embeddings, sample)), m, k, seed
     )
 
 
@@ -1073,26 +1033,19 @@ def pq_encode(
     per vector. One broadcast (the ~½ MB codebook tensor) + one narrow
     Arrow pass; nothing shuffles."""
     cb = pq_train(embeddings) if codebooks is None else codebooks
-    m, k, sub = cb.shape
-    sc = embeddings.sparkSession.sparkContext
-    b_cb = sc.broadcast(cb)
+    b_cb = embeddings.sparkSession.sparkContext.broadcast(cb)
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         books = b_cb.value
-        norms = [(c * c).sum(1) for c in books]
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mat = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            packed = np.zeros(len(mat), dtype=np.int64)
-            for i in range(m):
-                block = mat[:, i * sub : (i + 1) * sub]
-                # argmin over |c|² - 2x·c (|x|² constant per row)
-                d2 = norms[i] - 2.0 * (block @ books[i].T)
-                packed |= d2.argmin(1).astype(np.int64) << (8 * i)
-            yield pd.DataFrame({"vec_id": ids, "code": packed})
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
+                    "code": _pq_pack(_unit(_decode(pdf["embedding"])), books),
+                }
+            )
 
     return _spread_gemm(embeddings.select("vec_id", "embedding")).mapInPandas(
         encode, PQ_CODE_SCHEMA
@@ -1118,21 +1071,12 @@ def ann_pq_topk(
     (trained codebooks); recall vs exact asserted in tests."""
     cb = pq_train(embeddings) if codebooks is None else codebooks
     coded = pq_encode(embeddings, cb) if codes is None else codes
-    m, kk, sub = cb.shape
+    m = cb.shape[0]
     sc = embeddings.sparkSession.sparkContext
-
-    q_rows = embeddings.filter(F.col("vec_id").isin(*query_ids)).select(
-        "vec_id", "embedding"
-    ).collect()
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([list(r["embedding"]) for r in q_rows], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
-    # ADC tables: tables[q, i, j] = q_subᵢ · C[i, j]
-    tables = np.stack(
-        [q_mat[:, i * sub : (i + 1) * sub] @ cb[i].T for i in range(m)],
-        axis=1,
+    q_ids, q_mat = _normalized_corpus(
+        embeddings.filter(F.col("vec_id").isin(*query_ids))
     )
-    b_q, b_t = sc.broadcast(q_ids), sc.broadcast(tables)
+    b_q, b_t = sc.broadcast(q_ids), sc.broadcast(_adc_tables(q_mat, cb))
 
     def adc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         all_q, all_t = b_q.value, b_t.value
@@ -1140,11 +1084,7 @@ def ann_pq_topk(
             if pdf.empty:
                 continue
             vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            code = pdf["code"].to_numpy(dtype=np.int64)
-            # unpack: n×m uint8 indices
-            idx = np.stack(
-                [(code >> (8 * i)) & 0xFF for i in range(m)], axis=1
-            )
+            idx = _pq_unpack(pdf["code"].to_numpy(dtype=np.int64), m)
             for qi, qid in enumerate(all_q):
                 # score = Σᵢ T[qi, i, idx[:, i]]
                 score = all_t[qi][np.arange(m), idx].sum(axis=1)
@@ -1158,50 +1098,7 @@ def ann_pq_topk(
                 )
 
     shortlisted = coded.mapInPandas(adc, TOPK_SCORE_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    shortlist = (
-        shortlisted.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= k * rerank)
-        .select("query_id", "vec_id")
-    )
-
-    # exact re-rank of the tiny shortlist only
-    b_qmat = sc.broadcast(q_mat)
-
-    def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_q, all_qmat = b_q.value, b_qmat.value
-        qpos = {int(q): i for i, q in enumerate(all_q)}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            qi = pdf["query_id"].to_numpy(dtype=np.int64)
-            cos = np.round(
-                (mat * all_qmat[[qpos[int(q)] for q in qi]]).sum(axis=1), 6
-            )
-            yield pd.DataFrame(
-                {
-                    "query_id": qi,
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "cosine": cos,
-                }
-            )
-
-    reranked = (
-        shortlist.join(embeddings.select("vec_id", "embedding"), "vec_id")
-        .mapInPandas(exact, TOPK_SCORE_SCHEMA)
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _exact_rerank(embeddings, shortlisted, q_ids, q_mat, k, rerank)
 
 
 def ann_ivfpq_topk(
@@ -1231,34 +1128,15 @@ def ann_ivfpq_topk(
     model, assigned = _resolve_trained(trained, embeddings, n_cells, seed)
     cb = pq_train(embeddings) if codebooks is None else codebooks
     coded = pq_encode(embeddings, cb) if codes is None else codes
-    m, kk, sub = cb.shape
+    m = cb.shape[0]
     sc = embeddings.sparkSession.sparkContext
-    centers_n = _normalized_centers(model)
-
-    q_rows = embeddings.filter(F.col("vec_id").isin(*query_ids)).select(
-        "vec_id", "embedding"
-    ).collect()
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([list(r["embedding"]) for r in q_rows], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
-    probes = np.argsort(-(q_mat @ centers_n.T), axis=1)[:, :n_probe]
-    probe_df = embeddings.sparkSession.createDataFrame(
-        [
-            (int(q_ids[i]), int(c))
-            for i in range(len(q_ids))
-            for c in probes[i]
-        ],
-        ["query_id", "cell"],
+    q_ids, q_mat = _normalized_corpus(
+        embeddings.filter(F.col("vec_id").isin(*query_ids))
     )
-    tables = np.stack(
-        [q_mat[:, i * sub : (i + 1) * sub] @ cb[i].T for i in range(m)],
-        axis=1,
+    probe_df = _probe_frame(
+        embeddings.sparkSession, model, q_ids, q_mat, n_probe
     )
-    b_q, b_t, b_qmat = (
-        sc.broadcast(q_ids),
-        sc.broadcast(tables),
-        sc.broadcast(q_mat),
-    )
+    b_q, b_t = sc.broadcast(q_ids), sc.broadcast(_adc_tables(q_mat, cb))
 
     # candidate stream: codes of vectors in each query's probed cells
     cand = coded.join(assigned, "vec_id").join(
@@ -1272,11 +1150,8 @@ def ann_ivfpq_topk(
             if pdf.empty:
                 continue
             vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            code = pdf["code"].to_numpy(dtype=np.int64)
             qi = pdf["query_id"].to_numpy(dtype=np.int64)
-            idx = np.stack(
-                [(code >> (8 * i)) & 0xFF for i in range(m)], axis=1
-            )
+            idx = _pq_unpack(pdf["code"].to_numpy(dtype=np.int64), m)
             rows_t = all_t[[qpos[int(q)] for q in qi]]  # n×m×k
             score = rows_t[
                 np.arange(len(vid))[:, None], np.arange(m)[None, :], idx
@@ -1291,45 +1166,7 @@ def ann_ivfpq_topk(
             )
 
     shortlisted = cand.mapInPandas(adc, TOPK_SCORE_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    shortlist = (
-        shortlisted.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= k * rerank)
-        .select("query_id", "vec_id")
-    )
-
-    def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_q, all_qmat = b_q.value, b_qmat.value
-        qpos = {int(q): i for i, q in enumerate(all_q)}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            qi = pdf["query_id"].to_numpy(dtype=np.int64)
-            cos = np.round(
-                (mat * all_qmat[[qpos[int(q)] for q in qi]]).sum(axis=1), 6
-            )
-            yield pd.DataFrame(
-                {
-                    "query_id": qi,
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "cosine": cos,
-                }
-            )
-
-    return (
-        shortlist.join(embeddings.select("vec_id", "embedding"), "vec_id")
-        .mapInPandas(exact, TOPK_SCORE_SCHEMA)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _exact_rerank(embeddings, shortlisted, q_ids, q_mat, k, rerank)
 
 
 # ---------------------------------------------------------------------------
@@ -1341,10 +1178,6 @@ def ann_ivfpq_topk(
 # subspace: score(q, v) ≈ q·centroid[cell] (exact, tiny broadcast
 # matrix) + q·residual_approx (ADC over residual codebooks).
 # ---------------------------------------------------------------------------
-
-
-def _raw_centers(model) -> np.ndarray:
-    return np.array([np.asarray(c) for c in model.clusterCenters()])
 
 
 def cell_means(embeddings: DataFrame, assigned: DataFrame) -> np.ndarray:
@@ -1400,28 +1233,14 @@ def pq_train_residual(
     model = trained[0]
     raw_c = _raw_centers(model)
     norm_c = cell_means(embeddings, trained[1])
-    rows = (
-        embeddings.select("vec_id", "embedding")
-        .orderBy(F.md5(F.concat(F.lit("pq:"), F.col("vec_id").cast("string"))))
-        .limit(sample)
-        .collect()
-    )
-    raw = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
+    raw = _pq_sample(embeddings, sample)
     d2 = (
         (raw * raw).sum(1, keepdims=True)
         - 2.0 * (raw @ raw_c.T)
         + (raw_c * raw_c).sum(1)
     )
     cells = d2.argmin(1)
-    mat = raw / np.maximum(np.linalg.norm(raw, axis=1, keepdims=True), 1e-12)
-    resid = mat - norm_c[cells]
-    sub = EMB_DIM // m
-    return np.stack(
-        [
-            _lloyd(resid[:, i * sub : (i + 1) * sub], k, seed + i)
-            for i in range(m)
-        ]
-    )
+    return _train_codebooks(_unit(raw) - norm_c[cells], m, k, seed)
 
 
 PQ_CELL_CODE_SCHEMA = StructType(
@@ -1439,29 +1258,25 @@ def pq_encode_residual(
     """Encode every vector's within-cell residual: (vec_id, cell, code)
     — still ~16 bytes/vector of index. One broadcast (centroids +
     codebooks), one narrow Arrow pass over the cell-joined corpus."""
-    model, assigned = trained[0], trained[1]
+    assigned = trained[1]
     norm_c = cell_means(embeddings, assigned)
-    m, k, sub = codebooks.shape
     sc = embeddings.sparkSession.sparkContext
     b_cb, b_nc = sc.broadcast(codebooks), sc.broadcast(norm_c)
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         books, centers = b_cb.value, b_nc.value
-        norms = [(c * c).sum(1) for c in books]
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             cells = pdf["cell"].to_numpy(dtype=np.int64)
-            mat = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            resid = mat - centers[cells]
-            packed = np.zeros(len(mat), dtype=np.int64)
-            for i in range(m):
-                block = resid[:, i * sub : (i + 1) * sub]
-                d2 = norms[i] - 2.0 * (block @ books[i].T)
-                packed |= d2.argmin(1).astype(np.int64) << (8 * i)
-            yield pd.DataFrame({"vec_id": ids, "cell": cells, "code": packed})
+            resid = _unit(_decode(pdf["embedding"])) - centers[cells]
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
+                    "cell": cells,
+                    "code": _pq_pack(resid, books),
+                }
+            )
 
     corpus = embeddings.select("vec_id", "embedding").join(assigned, "vec_id")
     return _spread_gemm(corpus).mapInPandas(encode, PQ_CELL_CODE_SCHEMA)
@@ -1494,39 +1309,22 @@ def ann_ivfpq_residual_topk(
         if codes is None
         else codes
     )
-    m, kk, sub = cb.shape
+    m = cb.shape[0]
     sc = embeddings.sparkSession.sparkContext
     norm_c = cell_means(embeddings, assigned)
-
-    q_rows = embeddings.filter(F.col("vec_id").isin(*query_ids)).select(
-        "vec_id", "embedding"
-    ).collect()
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([list(r["embedding"]) for r in q_rows], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
+    q_ids, q_mat = _normalized_corpus(
+        embeddings.filter(F.col("vec_id").isin(*query_ids))
+    )
     cell_dots = q_mat @ norm_c.T  # nq × cells: the exact centroid term
     # probe ranking still uses the DIRECTIONAL centroids — q·cell_mean
     # under-ranks tight low-norm cells
-    probes = np.argsort(-(q_mat @ _normalized_centers(model).T), axis=1)[
-        :, :n_probe
-    ]
-    probe_df = embeddings.sparkSession.createDataFrame(
-        [
-            (int(q_ids[i]), int(c))
-            for i in range(len(q_ids))
-            for c in probes[i]
-        ],
-        ["query_id", "cell"],
+    probe_df = _probe_frame(
+        embeddings.sparkSession, model, q_ids, q_mat, n_probe
     )
-    tables = np.stack(
-        [q_mat[:, i * sub : (i + 1) * sub] @ cb[i].T for i in range(m)],
-        axis=1,
-    )
-    b_q, b_t, b_cd, b_qmat = (
+    b_q, b_t, b_cd = (
         sc.broadcast(q_ids),
-        sc.broadcast(tables),
+        sc.broadcast(_adc_tables(q_mat, cb)),
         sc.broadcast(cell_dots),
-        sc.broadcast(q_mat),
     )
 
     cand = coded.join(F.broadcast(probe_df), "cell")
@@ -1538,13 +1336,10 @@ def ann_ivfpq_residual_topk(
             if pdf.empty:
                 continue
             vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            code = pdf["code"].to_numpy(dtype=np.int64)
             cells = pdf["cell"].to_numpy(dtype=np.int64)
             qi = pdf["query_id"].to_numpy(dtype=np.int64)
             qrow = np.array([qpos[int(q)] for q in qi])
-            idx = np.stack(
-                [(code >> (8 * i)) & 0xFF for i in range(m)], axis=1
-            )
+            idx = _pq_unpack(pdf["code"].to_numpy(dtype=np.int64), m)
             resid_score = all_t[
                 qrow[:, None], np.arange(m)[None, :], idx
             ].sum(axis=1)
@@ -1559,45 +1354,7 @@ def ann_ivfpq_residual_topk(
             )
 
     shortlisted = cand.mapInPandas(adc, TOPK_SCORE_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    shortlist = (
-        shortlisted.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= k * rerank)
-        .select("query_id", "vec_id")
-    )
-
-    def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_q, all_qmat = b_q.value, b_qmat.value
-        qpos = {int(q): i for i, q in enumerate(all_q)}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            qi = pdf["query_id"].to_numpy(dtype=np.int64)
-            cos = np.round(
-                (mat * all_qmat[[qpos[int(q)] for q in qi]]).sum(axis=1), 6
-            )
-            yield pd.DataFrame(
-                {
-                    "query_id": qi,
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "cosine": cos,
-                }
-            )
-
-    return (
-        shortlist.join(embeddings.select("vec_id", "embedding"), "vec_id")
-        .mapInPandas(exact, TOPK_SCORE_SCHEMA)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _exact_rerank(embeddings, shortlisted, q_ids, q_mat, k, rerank)
 
 
 def split_centroid_drift(embeddings: DataFrame) -> DataFrame:
@@ -1702,7 +1459,7 @@ def pca_whiten_model(
         for pdf in batches:
             if pdf.empty:
                 continue
-            X = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
+            X = _decode(pdf["embedding"])
             n += X.shape[0]
             s += X.sum(axis=0)
             xtx += X.T @ X
@@ -1753,7 +1510,7 @@ def pca_whiten(
         for pdf in batches:
             if pdf.empty:
                 continue
-            X = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
+            X = _decode(pdf["embedding"])
             Y = np.round((X - m) @ w.T, 6)
             yield pd.DataFrame(
                 {
@@ -1957,10 +1714,6 @@ def multi_table_buckets(
     streaming screen writes this next to the embedding table,
     batch_id-partitioned). Same planes as embedding_neardup_pairs_lsh,
     so buckets agree bit-for-bit with the in-query path."""
-    sc = embeddings.sparkSession.sparkContext
-    b_planes = sc.broadcast(_plane_matrix(bits * tables, EMB_DIM))
-    powers = np.power(2, np.arange(bits)).astype(np.int64)
-
     schema = StructType(
         [
             StructField("vec_id", LongType()),
@@ -1968,36 +1721,12 @@ def multi_table_buckets(
             StructField("bucket", LongType()),
         ]
     )
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = b_planes.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.array(
-                [list(v) for v in pdf["embedding"]], dtype=np.float64
-            )
-            signs = (m @ planes.T) > 0
-            frames = []
-            for t in range(tables):
-                chunk = signs[:, t * bits : (t + 1) * bits]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": ids,
-                            "tbl": np.full(len(ids), t, dtype=np.int64),
-                            "bucket": (chunk * powers)
-                            .sum(axis=1)
-                            .astype(np.int64),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    return _spread_gemm(
-        embeddings.select("vec_id", "embedding")
-    ).mapInPandas(assign, schema)
+    return _sign_map(
+        embeddings,
+        bits * tables,
+        lambda pdf, signs: _table_frame(pdf, signs, bits, tables),
+        schema,
+    )
 
 
 CELL_BITS = 6  # 64 coarse cells — the persisted-index pruning grain
@@ -2027,12 +1756,6 @@ def multi_table_assignments(
     Same plane family as :func:`multi_table_buckets`, one GEMM for all
     tables + the cell planes; agrees bit-for-bit with the in-query
     path."""
-    sc = embeddings.sparkSession.sparkContext
-    n_planes = bits * tables + cell_bits
-    b_planes = sc.broadcast(_plane_matrix(n_planes, EMB_DIM))
-    powers = np.power(2, np.arange(bits)).astype(np.int64)
-    cell_powers = np.power(2, np.arange(cell_bits)).astype(np.int64)
-
     schema = StructType(
         [
             StructField("vec_id", LongType()),
@@ -2041,39 +1764,18 @@ def multi_table_assignments(
         ]
     )
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = b_planes.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.array(
-                [list(v) for v in pdf["embedding"]], dtype=np.float64
-            )
-            signs = (m @ planes.T) > 0
-            cells = (
-                (signs[:, bits * tables :] * cell_powers)
-                .sum(axis=1)
-                .astype(np.int64)
-            )
-            frames = []
-            for t in range(tables):
-                chunk = signs[:, t * bits : (t + 1) * bits]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": ids,
-                            "tb": t * (1 << bits)
-                            + (chunk * powers).sum(axis=1).astype(np.int64),
-                            "cell": cells,
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+    def emit(pdf: pd.DataFrame, signs: np.ndarray) -> pd.DataFrame:
+        rows = _table_frame(pdf, signs, bits, tables)
+        cells = _pack_signs(signs, cell_bits, offset=bits * tables)[:, 0]
+        return pd.DataFrame(
+            {
+                "vec_id": rows["vec_id"],
+                "tb": rows["tbl"] * (1 << bits) + rows["bucket"],
+                "cell": np.tile(cells, tables),
+            }
+        )
 
-    return _spread_gemm(
-        embeddings.select("vec_id", "embedding")
-    ).mapInPandas(assign, schema)
+    return _sign_map(embeddings, bits * tables + cell_bits, emit, schema)
 
 
 def screen_embeddings_against_corpus(
@@ -2474,9 +2176,6 @@ def _family_bucket_frame(
     multi_table_buckets' convention, so a pair shares config (b, T)'s
     retrieval iff bk{b} agrees at any index < T — the audit measures
     the production index bit-for-bit."""
-    sc = embeddings.sparkSession.sparkContext
-    n_planes = max(b * t for b, t in families.items())
-    b_planes = sc.broadcast(_plane_matrix(n_planes, EMB_DIM))
     fams = sorted(families.items())
     schema = StructType(
         [StructField("vec_id", LongType())]
@@ -2486,34 +2185,14 @@ def _family_bucket_frame(
         ]
     )
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = b_planes.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.array(
-                [list(v) for v in pdf["embedding"]], dtype=np.float64
-            )
-            signs = (m @ planes.T) > 0
-            out = {"vec_id": ids}
-            for b, max_t in fams:
-                powers = np.power(2, np.arange(b)).astype(np.int64)
-                bks = np.stack(
-                    [
-                        (signs[:, t * b : (t + 1) * b] * powers)
-                        .sum(axis=1)
-                        .astype(np.int64)
-                        for t in range(max_t)
-                    ],
-                    axis=1,
-                )
-                out[f"bk{b}"] = list(bks)
-            yield pd.DataFrame(out)
+    def emit(pdf: pd.DataFrame, signs: np.ndarray) -> pd.DataFrame:
+        out = {"vec_id": pdf["vec_id"].to_numpy(dtype=np.int64)}
+        for b, max_t in fams:
+            out[f"bk{b}"] = list(_pack_signs(signs, b, max_t))
+        return pd.DataFrame(out)
 
-    return _spread_gemm(
-        embeddings.select("vec_id", "embedding")
-    ).mapInPandas(assign, schema)
+    n_planes = max(b * t for b, t in fams)
+    return _sign_map(embeddings, n_planes, emit, schema)
 
 
 def ann_tune(
@@ -2710,13 +2389,13 @@ def density_cores(
     is no pair materialization at all; the self-match (cosine 1 with
     its own id) is subtracted per row. Corpus size is guarded like
     every broadcast-corpus brute pass. Scale path: swap candidate
-    generation onto the LSH/IVF machinery (lsh_neighbor_pairs at
-    16-24 bits, or the persisted IVF cell-probe index) and keep this
+    generation onto the LSH/IVF machinery (embedding_neardup_pairs_lsh
+    at 16-24 bits, or the persisted IVF cell-probe index) and keep this
     exact form as the recall audit — the brute/indexed split the ANN
     family already documents. Output: vec_id, n_neighbors, is_core."""
     sc = embeddings.sparkSession.sparkContext
     _guard_quadratic(embeddings, "density_cores", MAX_QUADRATIC_ROWS)
-    ids, mat = _normalized_corpus(embeddings)
+    _, mat = _normalized_corpus(embeddings)
     b_mat = sc.broadcast(mat)
 
     def block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2725,10 +2404,7 @@ def density_cores(
             if pdf.empty:
                 continue
             bids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mb = np.array(
-                [list(v) for v in pdf["embedding"]], dtype=np.float64
-            )
-            mb /= np.linalg.norm(mb, axis=1, keepdims=True)
+            mb = _unit(_decode(pdf["embedding"]))
             cos = np.round(mb @ corpus.T, 6)
             n = (cos >= threshold).sum(axis=1).astype(np.int64) - 1
             yield pd.DataFrame({"vec_id": bids, "n_neighbors": n})
@@ -2892,7 +2568,7 @@ def pca_components(
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            x = _decode(pdf["embedding"])
             yield pd.DataFrame(
                 {
                     "n": [len(x)],
@@ -2968,20 +2644,15 @@ def _probe_label_scores(
     Output: query_id, q_label, vec_id, label, cosine."""
     sc = embeddings.sparkSession.sparkContext
     labeled = embeddings.filter(F.col("label").isNotNull())
-    qrows = labeled.filter(F.col("vec_id").isin(*query_ids)).select(
-        "vec_id", "label", "embedding"
-    ).collect()
-    if not qrows:
+    qids, qlab, qmat = _normalized_corpus(
+        labeled.filter(F.col("vec_id").isin(*query_ids)), "label"
+    )
+    if not len(qids):
         # no labeled vector matches query_ids: the oracle returns an
-        # empty result, so do the same instead of letting np.linalg.norm
-        # crash on a 0×0 probe matrix
+        # empty result, so do the same without a corpus scan
         return embeddings.sparkSession.createDataFrame(
             [], PROBE_SCORE_SCHEMA
         )
-    qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    qlab = np.array([r["label"] for r in qrows], dtype=np.int64)
-    qmat = np.array([list(r["embedding"]) for r in qrows], dtype=np.float64)
-    qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
     b_q = sc.broadcast((qids, qlab, qmat))
 
     def block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2991,10 +2662,7 @@ def _probe_label_scores(
                 continue
             bids = pdf["vec_id"].to_numpy(dtype=np.int64)
             blab = pdf["label"].to_numpy(dtype=np.int64)
-            mb = np.array(
-                [list(v) for v in pdf["embedding"]], dtype=np.float64
-            )
-            mb /= np.linalg.norm(mb, axis=1, keepdims=True)
+            mb = _unit(_decode(pdf["embedding"]))
             cos = np.round(mb @ all_qmat.T, 6)  # n_corpus × n_queries
             n, nq = cos.shape
             qi = np.repeat(all_qids[np.newaxis, :], n, axis=0).ravel()
@@ -3039,19 +2707,7 @@ def hard_negative_topk(
     scored = _probe_label_scores(embeddings, query_ids).filter(
         F.col("q_label") != F.col("label")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "vec_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _top_k(scored, k)
 
 
 def triplet_candidates(
