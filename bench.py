@@ -598,7 +598,7 @@ def main() -> None:
     g_per_batch, g_index_rows = [], []
     try:
         init_growing_index(spark, shingle_docs(seed), f"{gtmp}/index")
-        screen = GrowingDedupScreen(f"{gtmp}/index", f"{gtmp}/out")
+        screen = GrowingDedupScreen(f"{gtmp}/index")
         for i in range(g_batches):
             batch = docs.filter(
                 F.col("doc_id") % (g_batches + 1) == i + 1

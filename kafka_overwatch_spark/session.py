@@ -20,11 +20,18 @@ Defaults are chosen for correctness-at-scale first:
   from run to run; with the number in the class name the same stage
   compiled again as a "new" class under another number (up to 20
   extra compiles per repeated report at sf0.001).
+- ``spark.executorEnv.PYTHONPATH`` names the directory that holds the
+  package: Python workers import it (Arrow bodies call module-level
+  functions, which cloudpickle ships by reference), so without it they
+  fail with ``ModuleNotFoundError`` when the driver runs outside that
+  directory. Spark merges it with its own paths and the launching
+  environment's ``PYTHONPATH``.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -39,6 +46,9 @@ SPARK_CONF = {
     "spark.sql.codegen.cache.maxEntries": "1000",
     "spark.sql.codegen.useIdInClassName": "false",
     "spark.ui.enabled": "false",
+    "spark.executorEnv.PYTHONPATH": str(
+        Path(__file__).resolve().parent.parent
+    ),
 }
 
 

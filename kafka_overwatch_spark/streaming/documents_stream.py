@@ -18,18 +18,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..pipelines.text import contamination_hits
-from .state import drain, write_batch
-
-
-def doc_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File stream of document rows; schema pinned from a static footer
-    read (streaming sources require an explicit schema)."""
-    schema = spark.read.parquet(input_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
+from .state import (
+    drain,
+    file_stream,
+    read_index,
+    read_totals,
+    seed_index,
+    write_batch,
+)
 
 
 class ContaminationScreen:
@@ -77,7 +73,7 @@ def run_dedup_screen(
     (availableNow); parquet sink + checkpoint for restart recovery."""
     handler = DedupScreen(corpus_shingles, out_dir)
     return drain(
-        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
         checkpoint,
     )
 
@@ -94,7 +90,7 @@ def run_contamination_screen(
     checkpoint pair recovers, unlike the memory sink."""
     handler = ContaminationScreen(probes, out_dir)
     return drain(
-        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
         checkpoint,
     )
 
@@ -144,21 +140,77 @@ def growing_store_path(base_path: str, kind: str) -> str:
 def init_growing_index(
     spark: SparkSession, corpus_shingles: DataFrame, base_path: str
 ) -> None:
-    """Seed the growing dedup index with the pre-existing corpus (lands
-    in the batch_id=-1 partitions, ordered before every stream batch).
-    One unified write (shingles + bands share the store schema)."""
+    """Seed the growing dedup index with the pre-existing corpus. One
+    unified write (shingles + bands share the store schema)."""
     from ..pipelines.dedup import minhash_bands
 
-    (
+    seed_index(
         _growing_union(
             shingles=corpus_shingles,
             bands=minhash_bands(corpus_shingles),
-        )
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("kind", "batch_id")
-        .parquet(f"{base_path}/store")
+        ),
+        f"{base_path}/store",
+        "kind",
     )
+
+
+def _batch_verdicts(
+    batch: DataFrame,
+    hits: DataFrame,
+    id_col: str,
+    corpus_reason: str,
+    intra_reason: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The verdict tail shared by the growing Jaccard and semantic
+    screens. ``hits`` is the fused (new_doc, corpus_doc, is_self) frame
+    of verified pairs: corpus pairs reject their new doc, self pairs
+    among the survivors resolve to the component-minimum keeper
+    (``neardup_components``, the batch engine's convention). Returns
+    (kept batch rows, keeper ids, rejected (doc_id, reason) rows)."""
+    from ..pipelines.dedup import neardup_components
+
+    dup_vs_corpus = (
+        hits.filter(~F.col("is_self"))
+        .select(F.col("new_doc").alias(id_col))
+        .distinct()
+    )
+    survivors = batch.join(
+        dup_vs_corpus, id_col, "left_anti"
+    ).localCheckpoint(eager=False)
+    surv_ids = survivors.select(id_col)
+    edges = (
+        hits.filter(F.col("is_self"))
+        .join(surv_ids.withColumnRenamed(id_col, "new_doc"), "new_doc")
+        .join(surv_ids.withColumnRenamed(id_col, "corpus_doc"), "corpus_doc")
+        .select(
+            F.least("new_doc", "corpus_doc").alias("vec_a"),
+            F.greatest("new_doc", "corpus_doc").alias("vec_b"),
+        )
+        .distinct()
+    )
+    comp = neardup_components(
+        edges, survivors.select(F.col(id_col).alias("vec_id"))
+    )
+    keepers = comp.filter(F.col("vec_id") == F.col("component")).select(
+        F.col("vec_id").alias(id_col)
+    )
+    kept = survivors.join(keepers, id_col)
+    # the corpus-dup set is re-derived as the complement of the two
+    # CHECKPOINTED frames (batch minus survivors) — referencing
+    # dup_vs_corpus here would re-execute the whole corpus verify a
+    # second time just to write the audit rows (measured ~0.8 s of the
+    # r8 per-batch floor)
+    rejected = (
+        batch.join(surv_ids, id_col, "left_anti")
+        .select(F.col(id_col).alias("doc_id"))
+        .withColumn("reason", F.lit(corpus_reason))
+        .unionByName(
+            comp.filter(F.col("vec_id") != F.col("component"))
+            .select(F.col("vec_id").alias("doc_id"))
+            .withColumn("reason", F.lit(intra_reason))
+        )
+    )
+    return kept, keepers, rejected
 
 
 class GrowingDedupScreen:
@@ -186,9 +238,7 @@ class GrowingDedupScreen:
     same store (``rejected_path``), so the batch's ENTIRE output is a
     single write action."""
 
-    def __init__(self, base_path: str, out_dir: str | None = None) -> None:
-        # out_dir retained for call-site compatibility; verdicts now
-        # live in the unified store (r11 single-action writer)
+    def __init__(self, base_path: str) -> None:
         self.base = base_path
         self.rejected_path = growing_store_path(base_path, "rejected")
 
@@ -203,7 +253,6 @@ class GrowingDedupScreen:
             JACCARD_THRESHOLD,
             _jaccard,
             minhash_bands,
-            neardup_components,
             shingle_docs,
         )
 
@@ -220,16 +269,12 @@ class GrowingDedupScreen:
         # keepers) — the first cut re-derived signatures three more
         # times, ~40% of the per-batch floor
         bands_new = minhash_bands(sh_new).localCheckpoint(eager=True)
-        corpus_sh = (
-            spark.read.parquet(growing_store_path(self.base, "shingles"))
-            .filter(F.col("batch_id") < batch_id)
-            .select("doc_id", "sh")
-        )
-        corpus_bands = (
-            spark.read.parquet(growing_store_path(self.base, "bands"))
-            .filter(F.col("batch_id") < batch_id)
-            .select("doc_id", "band_id", "band_key")
-        )
+        corpus_sh = read_index(
+            spark, growing_store_path(self.base, "shingles"), batch_id
+        ).select("doc_id", "sh")
+        corpus_bands = read_index(
+            spark, growing_store_path(self.base, "bands"), batch_id
+        ).select("doc_id", "band_id", "band_key")
         # FUSED verify (r10, VERDICT r9 next #2): candidates for BOTH
         # screens are generated up front with the max_bucket cap
         # applied per population AT GENERATION — corpus buckets capped
@@ -314,52 +359,8 @@ class GrowingDedupScreen:
             # driver-paced job instead of three
             .localCheckpoint(eager=False)
         )
-        dup_vs_corpus = (
-            hits.filter(~F.col("is_self"))
-            .select(F.col("new_doc").alias("doc_id"))
-            .distinct()
-        )
-        survivors = sh_new.join(
-            dup_vs_corpus, "doc_id", "left_anti"
-        ).localCheckpoint(eager=False)
-        surv_ids = survivors.select("doc_id")
-        edges = (
-            hits.filter(F.col("is_self"))
-            .join(
-                surv_ids.withColumnRenamed("doc_id", "new_doc"),
-                "new_doc",
-            )
-            .join(
-                surv_ids.withColumnRenamed("doc_id", "corpus_doc"),
-                "corpus_doc",
-            )
-            .select(
-                F.least("new_doc", "corpus_doc").alias("vec_a"),
-                F.greatest("new_doc", "corpus_doc").alias("vec_b"),
-            )
-            .distinct()
-        )
-        comp = neardup_components(
-            edges, survivors.select(F.col("doc_id").alias("vec_id"))
-        )
-        keepers = comp.filter(F.col("vec_id") == F.col("component")).select(
-            F.col("vec_id").alias("doc_id")
-        )
-        kept = survivors.join(keepers, "doc_id")
-        # verdicts (audit trail): every rejected doc + why. The
-        # corpus-dup set is re-derived as the complement of the two
-        # CHECKPOINTED frames (sh_new minus survivors) — referencing
-        # dup_vs_corpus here would re-execute the whole corpus screen
-        # a second time just to write the audit rows (measured ~0.8 s
-        # of the r8 per-batch floor)
-        rejected = sh_new.join(
-            survivors.select("doc_id"), "doc_id", "left_anti"
-        ).select("doc_id").withColumn(
-            "reason", F.lit("corpus_near_dup")
-        ).unionByName(
-            comp.filter(F.col("vec_id") != F.col("component"))
-            .select(F.col("vec_id").alias("doc_id"))
-            .withColumn("reason", F.lit("intra_batch_near_dup"))
+        kept, keepers, rejected = _batch_verdicts(
+            sh_new, hits, "doc_id", "corpus_near_dup", "intra_batch_near_dup"
         )
         # SINGLE-ACTION writer (r11, VERDICT r10 next #6): verdicts,
         # survivor shingles, and survivor bands are rows of one
@@ -383,15 +384,14 @@ def run_growing_dedup(
     spark: SparkSession,
     input_dir: str,
     base_path: str,
-    out_dir: str,
     checkpoint: str,
 ) -> StreamingQuery:
     """Drain the document feed through the growing-corpus dedup screen
     (availableNow, one file per trigger so arrival order is the file
-    order)."""
-    handler = GrowingDedupScreen(base_path, out_dir)
+    order). Verdicts land in the index store (``rejected_path``)."""
+    handler = GrowingDedupScreen(base_path)
     return drain(
-        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
         checkpoint,
     )
 
@@ -566,7 +566,7 @@ def run_dsir_screen(
     lm = spark.read.parquet(f"{base_path}/dsir_lm")
     handler = DsirScreen(lm, out_dir, tau)
     return drain(
-        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
         checkpoint,
     )
 
@@ -588,8 +588,7 @@ def init_containment_index(
     base_path: str,
     shingle_k: int | None = None,
 ) -> None:
-    """Seed the containment index with the pre-existing corpus
-    (batch_id=-1, ordered before every stream batch).
+    """Seed the containment index with the pre-existing corpus.
 
     ``shingle_k`` records the shingle width the corpus frame was built
     with (r13): on a dense closed-vocab corpus the batch family
@@ -608,12 +607,7 @@ def init_containment_index(
         (postings, "postings"),
         (postings.groupBy("s").agg(F.count("*").alias("df")), "freq"),
     ):
-        (
-            frame.withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{base_path}/{name}")
-        )
+        seed_index(frame, f"{base_path}/{name}")
     spark.createDataFrame(
         [(int(shingle_k if shingle_k is not None else SHINGLE_K),)],
         "shingle_k int",
@@ -634,48 +628,32 @@ class GrowingContainmentScreen:
 
     Replay-safe exactly like the Jaccard screen: index reads prune to
     ``batch_id < N`` partitions and writes dynamic-overwrite the
-    batch_id=N partitions."""
+    batch_id=N partitions.
+
+    The verdict tail is not ``_batch_verdicts``: there is no fused hit
+    frame — the intra-batch screen is a second containment pass that
+    needs the survivors first, so the survivors (and the kept slice
+    the three index appends read) are checkpointed eagerly."""
 
     def __init__(
-        self,
-        base_path: str,
-        out_dir: str,
-        threshold: float = 0.8,
-        max_bucket: int | None = None,
-        shingle_k: int | None = None,
-        posting_verify: bool = True,
+        self, base_path: str, out_dir: str, threshold: float = 0.8
     ) -> None:
         self.base = base_path
         self.out_dir = out_dir
         self.threshold = threshold
-        # default ON since r15 (VERDICT r14 next #7): verify |A∩B| by
-        # counting corpus POSTING rows — never scanning the corpus
-        # shingle-ARRAY column — measured ~12% faster at gen10 in r14
-        # (SCALE.md), bit-equal to the array verify in both cap modes
-        # (tests), and the r15 probe-side vocabulary pruning shrinks
-        # its fan-out further. Pass False for the array verify.
-        self.posting_verify = posting_verify
-        # None (default since r14, VERDICT r13 next #3) = EXACT mode:
-        # the posting side is semi-joined against the batch's probe
-        # shingles, so never-probed boilerplate buckets never enter
-        # the candidate join and recall is 1.0 by construction — the
-        # batch path's containment_adaptive_cap argument applied to
-        # the screen. Pass an int for a hard cost cap at a measured
-        # recall risk (the pre-r14 behavior).
-        self.max_bucket = max_bucket
-        # None → read the width the index was seeded with (meta); the
-        # batch MUST shingle at the index's K or containment values are
-        # meaningless and the candidate join explodes on dense corpora
-        self.shingle_k = shingle_k
+        self._k: int | None = None
 
     def _index_k(self, spark: SparkSession) -> int:
-        if self.shingle_k is None:
+        """The shingle width the index was seeded with (``meta``): the
+        batch MUST shingle at the index's K or containment values are
+        meaningless and the candidate join explodes on dense corpora."""
+        if self._k is None:
             from pyspark.errors import AnalysisException
 
             from ..pipelines.dedup import SHINGLE_K
 
             try:
-                self.shingle_k = int(
+                self._k = int(
                     spark.read.parquet(f"{self.base}/meta").collect()[0][
                         "shingle_k"
                     ]
@@ -690,8 +668,8 @@ class GrowingContainmentScreen:
                 # an exploding candidate join).
                 if "PATH_NOT_FOUND" not in str(exc):
                     raise
-                self.shingle_k = SHINGLE_K
-        return self.shingle_k
+                self._k = SHINGLE_K
+        return self._k
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from ..pipelines.dedup import (
@@ -704,16 +682,12 @@ class GrowingContainmentScreen:
         sh_new = shingle_docs(
             batch_df, self._index_k(spark)
         ).localCheckpoint(eager=True)
-        corpus_sh = (
-            spark.read.parquet(f"{self.base}/shingles")
-            .filter(F.col("batch_id") < batch_id)
-            .select("doc_id", "sh")
-        )
-        corpus_postings = (
-            spark.read.parquet(f"{self.base}/postings")
-            .filter(F.col("batch_id") < batch_id)
-            .select("doc_id", "s")
-        )
+        corpus_sh = read_index(
+            spark, f"{self.base}/shingles", batch_id
+        ).select("doc_id", "sh")
+        corpus_postings = read_index(
+            spark, f"{self.base}/postings", batch_id
+        ).select("doc_id", "s")
         # r14 (VERDICT r13 next #3, the batch family's levers applied
         # to the screen): the probe ordering only ever reads df for the
         # BATCH's own shingles, so the per-batch-growing full-vocabulary
@@ -726,20 +700,25 @@ class GrowingContainmentScreen:
             sh_new.select(F.explode("sh").alias("s")).distinct()
         )
         corpus_freq = (
-            spark.read.parquet(f"{self.base}/freq")
-            .filter(F.col("batch_id") < batch_id)
+            read_index(spark, f"{self.base}/freq", batch_id)
             .join(batch_s, "s")
             .groupBy("s")
             .agg(F.sum("df").alias("df"))
         )
+        # exact mode (max_bucket=None, r14): the posting side is
+        # semi-joined against the batch's probe shingles, so recall is
+        # 1.0 by construction; posting verify (r15) counts |A∩B| over
+        # corpus POSTING rows instead of scanning the shingle arrays —
+        # measured ~12% faster at gen10 (SCALE.md), bit-equal to the
+        # array verify (tests compare the two paths of the batch twin)
         hits = screen_containment_against_corpus(
             sh_new,
             corpus_sh,
             threshold=self.threshold,
-            max_bucket=self.max_bucket,
+            max_bucket=None,
             corpus_postings=corpus_postings,
             corpus_freq=corpus_freq,
-            posting_verify=self.posting_verify,
+            posting_verify=True,
         )
         contained = hits.select(
             F.col("new_doc").alias("doc_id")
@@ -752,8 +731,8 @@ class GrowingContainmentScreen:
             survivors,
             survivors,
             threshold=self.threshold,
-            max_bucket=self.max_bucket,
-            posting_verify=self.posting_verify,
+            max_bucket=None,
+            posting_verify=True,
         )
         edges = self_hits.select(
             F.least("new_doc", "corpus_doc").alias("vec_a"),
@@ -793,15 +772,12 @@ def run_growing_containment(
     out_dir: str,
     checkpoint: str,
     threshold: float = 0.8,
-    max_bucket: int | None = None,
 ) -> StreamingQuery:
     """Drain the document feed through the growing containment screen
     (availableNow, one file per trigger = arrival order is file order)."""
-    handler = GrowingContainmentScreen(
-        base_path, out_dir, threshold, max_bucket
-    )
+    handler = GrowingContainmentScreen(base_path, out_dir, threshold)
     return drain(
-        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
         checkpoint,
     )
 
@@ -848,8 +824,7 @@ def init_semantic_index(
     tables: int | None = None,
 ) -> None:
     """Seed the growing semantic index: encode the pre-existing corpus
-    and write its embedding table + packed multi-table bucket index
-    (batch_id = -1, ordered before every stream batch).
+    and write its embedding table + packed multi-table bucket index.
 
     ``bits``/``tables`` select the LSH geometry (default: the
     LSH_BITS/NEARDUP_TABLES constants) — pass the pair
@@ -874,14 +849,8 @@ def init_semantic_index(
         bits=bits if bits is not None else LSH_BITS,
         tables=tables if tables is not None else NEARDUP_TABLES,
     ).localCheckpoint(eager=True)
-    # a plain (static) overwrite: seeding replaces the whole index
     for name, frame in _semantic_index_slice(emb, asg).items():
-        (
-            frame.withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{base_path}/{name}")
-        )
+        seed_index(frame, f"{base_path}/{name}")
 
 
 class GrowingSemanticScreen:
@@ -922,7 +891,7 @@ class GrowingSemanticScreen:
         self.tables = tables if tables is not None else NEARDUP_TABLES
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from ..pipelines.dedup import cosine, neardup_components
+        from ..pipelines.dedup import cosine
         from ..pipelines.encode import encode_documents
         from ..pipelines.similarity import multi_table_assignments
 
@@ -963,11 +932,8 @@ class GrowingSemanticScreen:
         # corpus_doc) for the vector-fetch pruning below. Checkpointed:
         # two consumers (cell collect + fused verify).
         cand = (
-            spark.read.parquet(f"{self.base}/buckets")
-            .filter(
-                (F.col("batch_id") < batch_id)
-                & F.col("tb").isin(probe_tbs)
-            )
+            read_index(spark, f"{self.base}/buckets", batch_id)
+            .filter(F.col("tb").isin(probe_tbs))
             .select(F.col("vec_id").alias("corpus_doc"), "tb", "cell")
             .join(
                 F.broadcast(
@@ -1017,11 +983,8 @@ class GrowingSemanticScreen:
         )
         if cand_cells:
             other_vec = (
-                spark.read.parquet(f"{self.base}/embeddings")
-                .filter(
-                    (F.col("batch_id") < batch_id)
-                    & F.col("cell").isin(cand_cells)
-                )
+                read_index(spark, f"{self.base}/embeddings", batch_id)
+                .filter(F.col("cell").isin(cand_cells))
                 .select(
                     F.col("vec_id").alias("corpus_doc"),
                     F.col("embedding").alias("emb_c"),
@@ -1044,47 +1007,12 @@ class GrowingSemanticScreen:
             # fold into one driver-paced job instead of three
             .localCheckpoint(eager=False)
         )
-        dup_vs_corpus = (
-            hits.filter(~F.col("is_self"))
-            .select(F.col("new_doc").alias("vec_id"))
-            .distinct()
-        )
-        survivors = emb_new.join(
-            dup_vs_corpus, "vec_id", "left_anti"
-        ).localCheckpoint(eager=False)
-        surv_ids = survivors.select("vec_id")
-        edges = (
-            hits.filter(F.col("is_self"))
-            .join(
-                surv_ids.withColumnRenamed("vec_id", "new_doc"),
-                "new_doc",
-            )
-            .join(
-                surv_ids.withColumnRenamed("vec_id", "corpus_doc"),
-                "corpus_doc",
-            )
-            .select(
-                F.least("new_doc", "corpus_doc").alias("vec_a"),
-                F.greatest("new_doc", "corpus_doc").alias("vec_b"),
-            )
-            .distinct()
-        )
-        comp = neardup_components(edges, surv_ids)
-        keepers = comp.filter(
-            F.col("vec_id") == F.col("component")
-        ).select("vec_id")
-        kept = survivors.join(keepers, "vec_id")
-        # corpus-dup set re-derived as the complement of the two
-        # CHECKPOINTED frames — referencing dup_vs_corpus would re-run
-        # the whole candidate verify join just to write audit rows
-        rejected = emb_new.join(
-            survivors.select("vec_id"), "vec_id", "left_anti"
-        ).select(
-            F.col("vec_id").alias("doc_id")
-        ).withColumn("reason", F.lit("corpus_semantic_dup")).unionByName(
-            comp.filter(F.col("vec_id") != F.col("component"))
-            .select(F.col("vec_id").alias("doc_id"))
-            .withColumn("reason", F.lit("intra_batch_semantic_dup"))
+        kept, keepers, rejected = _batch_verdicts(
+            emb_new,
+            hits,
+            "vec_id",
+            "corpus_semantic_dup",
+            "intra_batch_semantic_dup",
         )
         write_batch(rejected.coalesce(8), self.out_dir, batch_id)
         # slices of the checkpointed batch frames — not a third GEMM
@@ -1114,7 +1042,7 @@ def run_growing_semantic(
         base_path, out_dir, threshold, bits=bits, tables=tables
     )
     return drain(
-        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
         checkpoint,
     )
 
@@ -1237,7 +1165,7 @@ def run_quality_drift(
     cadence)."""
     handler = QualityDriftMonitor(out_dir)
     return drain(
-        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
         checkpoint,
     )
 
@@ -1246,21 +1174,17 @@ def init_novelty_index(
     spark: SparkSession, documents: DataFrame, base_path: str
 ) -> None:
     """Seed the gram index for the streaming novelty monitor: the
-    DISTINCT 60-bit 5-gram hashes of the seed corpus, batch_id = -1
-    (same replay-idempotency layout as the dedup/semantic indexes)."""
+    DISTINCT 60-bit 5-gram hashes of the seed corpus."""
     from ..pipelines.text import _norm_tokens, gram_hash_set
 
-    (
+    seed_index(
         documents.filter(F.col("text").isNotNull())
         # token array projected once per row (r15, guide §4.1 — see
         # text.repetition_stats)
         .select(_norm_tokens().alias("__toks"))
         .select(F.explode(gram_hash_set(toks=F.col("__toks"))).alias("g"))
-        .distinct()
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{base_path}/grams")
+        .distinct(),
+        f"{base_path}/grams",
     )
 
 
@@ -1310,11 +1234,7 @@ class NoveltyMonitor:
             .distinct()
             .localCheckpoint(eager=True)
         )
-        seen = (
-            spark.read.parquet(f"{self.base}/grams")
-            .filter(F.col("batch_id") < batch_id)
-            .select("g")
-        )
+        seen = read_index(spark, f"{self.base}/grams", batch_id).select("g")
         novel = grams.join(seen, "g", "left_anti").localCheckpoint(
             eager=True
         )
@@ -1347,18 +1267,12 @@ def init_keyness_index(
     spark: SparkSession, documents: DataFrame, base_path: str
 ) -> None:
     """Seed the (source, token, cnt) lifetime index for the streaming
-    keyness-drift monitor (batch_id = -1; lifetime totals at batch N
-    are the SUM over batch_id < N partitions — counts merge by
-    addition, so the state is mergeable and replay-stable)."""
+    keyness-drift monitor (lifetime totals at batch N are the SUM over
+    batch_id < N partitions — counts merge by addition, so the state is
+    mergeable and replay-stable)."""
     from ..pipelines.text import source_token_counts
 
-    (
-        source_token_counts(documents)
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{base_path}/counts")
-    )
+    seed_index(source_token_counts(documents), f"{base_path}/counts")
 
 
 class KeynessDriftMonitor:
@@ -1398,11 +1312,8 @@ class KeynessDriftMonitor:
         batch_counts = source_token_counts(batch_df).localCheckpoint(
             eager=True
         )
-        lifetime = (
-            spark.read.parquet(f"{self.base}/counts")
-            .filter(F.col("batch_id") < batch_id)
-            .groupBy("source", "token")
-            .agg(F.sum("cnt").alias("cnt"))
+        lifetime = read_totals(
+            spark, f"{self.base}/counts", batch_id, "source", "token"
         )
         release = keyness_drift(batch_counts, lifetime)
         write_batch(release.coalesce(1), self.out_dir, batch_id)
@@ -1420,7 +1331,7 @@ def run_keyness_monitor(
     (availableNow trigger)."""
     handler = KeynessDriftMonitor(base_path, out_dir)
     return drain(
-        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
         checkpoint,
     )
 
@@ -1436,6 +1347,6 @@ def run_novelty_monitor(
     (availableNow trigger)."""
     handler = NoveltyMonitor(base_path, out_dir)
     return drain(
-        doc_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
         checkpoint,
     )

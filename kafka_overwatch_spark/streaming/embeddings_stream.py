@@ -18,38 +18,20 @@ nothing), exactly the keyness-index shape at a bounded grain.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .state import drain, write_batch
-
-
-def emb_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File stream of embedding rows; schema pinned from a static
-    footer read (streaming sources require an explicit schema)."""
-    schema = spark.read.parquet(input_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
+from .state import drain, file_stream, read_totals, seed_index, write_batch
 
 
 def init_centroid_index(
     spark: SparkSession, embeddings: DataFrame, base_path: str
 ) -> None:
     """Seed the (dim, qsum, n) lifetime sums for the centroid-drift
-    monitor (batch_id = -1; lifetime state at batch N is the SUM over
-    batch_id < N partitions)."""
+    monitor (lifetime state at batch N is the SUM over batch_id < N
+    partitions)."""
     from ..pipelines.similarity import quantized_dim_sums
 
-    (
-        quantized_dim_sums(embeddings)
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{base_path}/sums")
-    )
+    seed_index(quantized_dim_sums(embeddings), f"{base_path}/sums")
 
 
 class CentroidDriftMonitor:
@@ -75,15 +57,7 @@ class CentroidDriftMonitor:
         batch_sums = quantized_dim_sums(batch_df).localCheckpoint(
             eager=True
         )
-        lifetime = (
-            spark.read.parquet(f"{self.base}/sums")
-            .filter(F.col("batch_id") < batch_id)
-            .groupBy("dim")
-            .agg(
-                F.sum("qsum").alias("qsum"),
-                F.sum("n").cast("long").alias("n"),
-            )
-        )
+        lifetime = read_totals(spark, f"{self.base}/sums", batch_id, "dim")
         release = centroid_drift(batch_sums, lifetime)
         write_batch(release.coalesce(1), self.out_dir, batch_id)
         write_batch(batch_sums.coalesce(1), f"{self.base}/sums", batch_id)
@@ -100,6 +74,6 @@ def run_centroid_monitor(
     (availableNow trigger)."""
     handler = CentroidDriftMonitor(base_path, out_dir)
     return drain(
-        emb_stream(spark, input_dir).writeStream.foreachBatch(handler),
+        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
         checkpoint,
     )

@@ -22,7 +22,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .state import GenerationalState, drain, write_batch
+from .state import (
+    GenerationalState,
+    drain,
+    read_totals,
+    seed_index,
+    write_batch,
+)
 
 EVENT_SCHEMA = StructType(
     [
@@ -541,17 +547,14 @@ def init_ks_index(
     spark: SparkSession, events: DataFrame, base_path: str
 ) -> None:
     """Seed the (event_type, value, cnt) lifetime index for the
-    streaming value-drift monitor (batch_id = -1; lifetime counts at
-    batch N are the SUM over batch_id < N partitions — mergeable, the
-    keyness-index convention)."""
-    (
+    streaming value-drift monitor (lifetime counts at batch N are the
+    SUM over batch_id < N partitions — mergeable, the keyness-index
+    convention)."""
+    seed_index(
         events.filter(F.col("value").isNotNull())
         .groupBy("event_type", "value")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{base_path}/counts")
+        .agg(F.count("*").alias("cnt")),
+        f"{base_path}/counts",
     )
 
 
@@ -589,11 +592,8 @@ class ValueDriftMonitor:
             .agg(F.count("*").alias("cnt"))
             .localCheckpoint(eager=True)
         )
-        lifetime = (
-            spark.read.parquet(f"{self.base}/counts")
-            .filter(F.col("batch_id") < batch_id)
-            .groupBy("event_type", "value")
-            .agg(F.sum("cnt").alias("cnt"))
+        lifetime = read_totals(
+            spark, f"{self.base}/counts", batch_id, "event_type", "value"
         )
         release = ks_drift_counts(batch_counts, lifetime)
         write_batch(release.coalesce(1), self.out_dir, batch_id)

@@ -1,8 +1,20 @@
 """Shared plumbing for the streaming monitors and screens.
 
-``drain`` runs a configured stream to completion with availableNow and
-fails loudly on timeout; ``write_batch`` is the replay-safe per-batch
-write every foreachBatch handler appends its output with.
+``file_stream`` is the parquet feed every documents and embeddings
+handler reads; ``drain`` runs a configured stream to completion with
+availableNow and fails loudly on timeout; ``write_batch`` is the
+replay-safe per-batch write every foreachBatch handler appends its
+output with.
+
+Persisted indexes (the growing screens' corpora, the monitors'
+lifetime state) share one batch_id-partitioned layout, defined here
+only: ``seed_index`` writes the pre-existing corpus at batch_id = -1
+with a static overwrite, which also wipes every batch partition of an
+earlier run; batch N reads the index through ``read_index``, pruned to
+batch_id < N, so a replayed batch never sees its own rows; and batch N
+appends with ``write_batch``, whose dynamic overwrite replaces exactly
+the batch_id = N partitions. ``read_totals`` is the read of an
+additive index, whose lifetime state is the sum of its partitions.
 
 ``GenerationalState`` is parquet state with an atomic CURRENT-pointer
 commit, shared by every foreachBatch handler that maintains persisted state
@@ -34,6 +46,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 DRAIN_TIMEOUT_S = 300
+
+
+def file_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+    """File stream of parquet rows, one file per trigger (arrival order
+    is file order); schema pinned from a static footer read (streaming
+    sources require an explicit schema)."""
+    schema = spark.read.parquet(input_dir).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(input_dir)
+    )
 
 
 def drain(writer: DataStreamWriter, checkpoint: str) -> StreamingQuery:
@@ -71,6 +95,35 @@ def write_batch(
         .partitionBy(*partition_cols, "batch_id")
         .parquet(path)
     )
+
+
+def seed_index(df: DataFrame, path: str, *partition_cols: str) -> None:
+    """Seed an index with ``df`` at batch_id = -1, ordered before every
+    stream batch. The overwrite is static on purpose: re-seeding must
+    delete a previous run's batch partitions, which ``write_batch``'s
+    dynamic overwrite would keep."""
+    (
+        df.withColumn("batch_id", F.lit(-1))
+        .write.mode("overwrite")
+        .partitionBy(*partition_cols, "batch_id")
+        .parquet(path)
+    )
+
+
+def read_index(spark: SparkSession, path: str, batch_id: int) -> DataFrame:
+    """The index as batch ``batch_id`` sees it: the seed and every
+    earlier batch, pruned on the batch_id partition column."""
+    return spark.read.parquet(path).filter(F.col("batch_id") < batch_id)
+
+
+def read_totals(
+    spark: SparkSession, path: str, batch_id: int, *keys: str
+) -> DataFrame:
+    """Lifetime totals of an additive index as batch ``batch_id`` sees
+    them: every column other than ``keys`` summed by ``keys``."""
+    index = read_index(spark, path, batch_id)
+    values = [c for c in index.columns if c not in (*keys, "batch_id")]
+    return index.groupBy(*keys).agg(*(F.sum(c).alias(c) for c in values))
 
 
 class GenerationalState:

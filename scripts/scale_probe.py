@@ -90,7 +90,7 @@ def growing_screen(spark, sf_dir: str, batches: int = 4):
     per_batch = []
     try:
         init_growing_index(spark, shingle_docs(seed), f"{tmp}/index")
-        screen = GrowingDedupScreen(f"{tmp}/index", f"{tmp}/out")
+        screen = GrowingDedupScreen(f"{tmp}/index")
         for i in range(batches):
             batch = docs.filter(F.col("doc_id") % (batches + 1) == i + 1)
             t0 = time.time()

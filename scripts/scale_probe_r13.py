@@ -109,7 +109,11 @@ def growing_screens(spark, sf_dir: str, batches: int = 4):
                     spark, seed_sh, f"{tmp}/index", **init_kwargs
                 )
             seed_sec = round(time.time() - t0, 3)
-            screen = screen_cls(f"{tmp}/index", f"{tmp}/out")
+            screen = (
+                screen_cls(f"{tmp}/index")
+                if screen_cls is GrowingDedupScreen
+                else screen_cls(f"{tmp}/index", f"{tmp}/out")
+            )
             for i in range(batches):
                 batch = docs.filter(mod == i)
                 t0 = time.time()

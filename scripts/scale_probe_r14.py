@@ -206,7 +206,11 @@ def probe_screens(spark, registry, bench, tiers, batches: int = 4) -> None:
                         spark, seed_sh, f"{tmp}/index", shingle_k=seed_k
                     )
                 seed_sec = round(time.time() - t0, 3)
-                screen = screen_cls(f"{tmp}/index", f"{tmp}/out")
+                screen = (
+                    screen_cls(f"{tmp}/index")
+                    if screen_cls is GrowingDedupScreen
+                    else screen_cls(f"{tmp}/index", f"{tmp}/out")
+                )
                 for i in range(batches):
                     batch = docs.filter(mod == i)
                     t0 = time.time()

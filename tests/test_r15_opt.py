@@ -162,7 +162,7 @@ def test_screen_lazy_frames_materialize_within_batch(spark):
         "dedup",
         init_growing_index,
         shingle_docs(seed),
-        GrowingDedupScreen,
+        lambda index, out: GrowingDedupScreen(index),
         lambda tmp: {
             r.doc_id
             for r in spark.read.parquet(f"{tmp}/index/store")

@@ -94,11 +94,7 @@ def test_growing_dedup_stream_equals_sequential(spark):
 
         init_growing_index(spark, shingle_docs(corpus), f"{tmp}/index")
         run_growing_dedup(
-            spark,
-            f"{tmp}/feed",
-            f"{tmp}/index",
-            f"{tmp}/quarantine",
-            f"{tmp}/ckpt",
+            spark, f"{tmp}/feed", f"{tmp}/index", f"{tmp}/ckpt"
         )
         streamed_kept = sorted(
             r.doc_id
@@ -135,7 +131,7 @@ def test_growing_dedup_batch_replay_is_idempotent(spark):
     batch = docs.filter(F.col("doc_id") >= 300)
     with tempfile.TemporaryDirectory() as tmp:
         init_growing_index(spark, shingle_docs(corpus), f"{tmp}/index")
-        screen = GrowingDedupScreen(f"{tmp}/index", f"{tmp}/q")
+        screen = GrowingDedupScreen(f"{tmp}/index")
         screen(batch, 0)
         first = sorted(
             tuple(r)

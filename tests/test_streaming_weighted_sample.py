@@ -31,11 +31,11 @@ def _py_reservoir(rows, k=5):
 
 def _drain(spark, input_dir, out_dir, checkpoint, k):
     from kafka_overwatch_spark.streaming.documents_stream import (
-        doc_stream,
         streaming_weighted_sample,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream
 
-    res = streaming_weighted_sample(doc_stream(spark, input_dir), k=k)
+    res = streaming_weighted_sample(file_stream(spark, input_dir), k=k)
 
     def sink(batch_df, batch_id):
         (
