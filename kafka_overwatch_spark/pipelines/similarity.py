@@ -2361,7 +2361,8 @@ def choose_ann_config(
 ) -> tuple[int, int]:
     """Collect the frontier's chosen (bits, tables) — the dim-grain
     (≤ |configs| rows) decision the growing semantic screen consumes
-    at init time (run_growing_semantic's tuned path)."""
+    at init time (``GrowingSemanticScreen(bits=, tables=)`` run through
+    ``state.run``, the tuned path)."""
     row = (
         ann_tune(embeddings, query_ids, k, configs, target_recall)
         .filter(F.col("chosen"))

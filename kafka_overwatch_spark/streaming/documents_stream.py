@@ -15,17 +15,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..pipelines.text import contamination_hits
-from .state import (
-    drain,
-    file_stream,
-    read_index,
-    read_totals,
-    seed_index,
-    write_batch,
-)
+from .state import read_index, read_totals, seed_index, write_batch
 
 
 class ContaminationScreen:
@@ -60,39 +52,6 @@ class DedupScreen:
 
         hits = screen_against_corpus(shingle_docs(batch_df), self.corpus)
         write_batch(hits, self.out_dir, batch_id)
-
-
-def run_dedup_screen(
-    spark: SparkSession,
-    input_dir: str,
-    corpus_shingles: DataFrame,
-    out_dir: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Drain the document feed through the incremental dedup screen
-    (availableNow); parquet sink + checkpoint for restart recovery."""
-    handler = DedupScreen(corpus_shingles, out_dir)
-    return drain(
-        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )
-
-
-def run_contamination_screen(
-    spark: SparkSession,
-    input_dir: str,
-    probes: DataFrame,
-    out_dir: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Drain the document feed through the screen (availableNow);
-    returns the finished query. Restart-safe: the parquet sink +
-    checkpoint pair recovers, unlike the memory sink."""
-    handler = ContaminationScreen(probes, out_dir)
-    return drain(
-        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )
 
 
 def _growing_union(
@@ -380,22 +339,6 @@ class GrowingDedupScreen:
         write_batch(uni, f"{self.base}/store", batch_id, "kind")
 
 
-def run_growing_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    base_path: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Drain the document feed through the growing-corpus dedup screen
-    (availableNow, one file per trigger so arrival order is the file
-    order). Verdicts land in the index store (``rejected_path``)."""
-    handler = GrowingDedupScreen(base_path)
-    return drain(
-        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Streaming weighted reservoir (r7): the stateful mirror of
 # `pipelines/sampling.weighted_sample`. A-ES top-k is MERGEABLE — the k
@@ -551,24 +494,6 @@ class DsirScreen:
             "keep", F.col("log_ratio") >= self.tau
         )
         write_batch(verdicts, self.out_dir, batch_id)
-
-
-def run_dsir_screen(
-    spark: SparkSession,
-    input_dir: str,
-    base_path: str,
-    out_dir: str,
-    checkpoint: str,
-    tau: float = 0.0,
-) -> StreamingQuery:
-    """Drain the document feed through the DSIR screen (availableNow);
-    the LM is read once from the persisted table."""
-    lm = spark.read.parquet(f"{base_path}/dsir_lm")
-    handler = DsirScreen(lm, out_dir, tau)
-    return drain(
-        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -763,23 +688,6 @@ class GrowingContainmentScreen:
             ),
         ):
             write_batch(frame, f"{self.base}/{name}", batch_id)
-
-
-def run_growing_containment(
-    spark: SparkSession,
-    input_dir: str,
-    base_path: str,
-    out_dir: str,
-    checkpoint: str,
-    threshold: float = 0.8,
-) -> StreamingQuery:
-    """Drain the document feed through the growing containment screen
-    (availableNow, one file per trigger = arrival order is file order)."""
-    handler = GrowingContainmentScreen(base_path, out_dir, threshold)
-    return drain(
-        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1023,30 +931,6 @@ class GrowingSemanticScreen:
             write_batch(frame, f"{self.base}/{name}", batch_id)
 
 
-def run_growing_semantic(
-    spark: SparkSession,
-    input_dir: str,
-    base_path: str,
-    out_dir: str,
-    checkpoint: str,
-    threshold: float = 0.9,
-    ann_config: tuple[int, int] | None = None,
-) -> StreamingQuery:
-    """Drain the document feed through the growing semantic screen
-    (availableNow, one file per trigger — arrival order is file
-    order). ``ann_config``: a measured (bits, tables) pair from
-    similarity.choose_ann_config — must be the pair the index was
-    seeded with (init_semantic_index)."""
-    bits, tables = ann_config if ann_config else (None, None)
-    handler = GrowingSemanticScreen(
-        base_path, out_dir, threshold, bits=bits, tables=tables
-    )
-    return drain(
-        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )
-
-
 class QualityDriftMonitor:
     """foreachBatch handler for streaming corpus-quality DRIFT
     detection (r9): each micro-batch releases its quality-score
@@ -1151,22 +1035,6 @@ def quality_drift_from_releases(
         F.col("o.mean_score").alias("mean_score"),
         F.col("o.cusum_hi").alias("cusum_hi"),
         F.col("o.cusum_lo").alias("cusum_lo"),
-    )
-
-
-def run_quality_drift(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Drain the document feed through the quality-drift monitor
-    (availableNow; production runs the trigger at the crawl-shard
-    cadence)."""
-    handler = QualityDriftMonitor(out_dir)
-    return drain(
-        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
     )
 
 
@@ -1318,35 +1186,3 @@ class KeynessDriftMonitor:
         release = keyness_drift(batch_counts, lifetime)
         write_batch(release.coalesce(1), self.out_dir, batch_id)
         write_batch(batch_counts.coalesce(4), f"{self.base}/counts", batch_id)
-
-
-def run_keyness_monitor(
-    spark: SparkSession,
-    input_dir: str,
-    base_path: str,
-    out_dir: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Drain the document feed through the keyness-drift monitor
-    (availableNow trigger)."""
-    handler = KeynessDriftMonitor(base_path, out_dir)
-    return drain(
-        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )
-
-
-def run_novelty_monitor(
-    spark: SparkSession,
-    input_dir: str,
-    base_path: str,
-    out_dir: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Drain the document feed through the novelty monitor
-    (availableNow trigger)."""
-    handler = NoveltyMonitor(base_path, out_dir)
-    return drain(
-        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )

@@ -18,9 +18,8 @@ nothing), exactly the keyness-index shape at a bounded grain.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
-from .state import drain, file_stream, read_totals, seed_index, write_batch
+from .state import read_totals, seed_index, write_batch
 
 
 def init_centroid_index(
@@ -61,19 +60,3 @@ class CentroidDriftMonitor:
         release = centroid_drift(batch_sums, lifetime)
         write_batch(release.coalesce(1), self.out_dir, batch_id)
         write_batch(batch_sums.coalesce(1), f"{self.base}/sums", batch_id)
-
-
-def run_centroid_monitor(
-    spark: SparkSession,
-    input_dir: str,
-    base_path: str,
-    out_dir: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Drain the embedding feed through the centroid-drift monitor
-    (availableNow trigger)."""
-    handler = CentroidDriftMonitor(base_path, out_dir)
-    return drain(
-        file_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )

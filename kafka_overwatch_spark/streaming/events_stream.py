@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -24,7 +23,7 @@ from pyspark.sql.types import (
 
 from .state import (
     GenerationalState,
-    drain,
+    file_stream,
     read_totals,
     seed_index,
     write_batch,
@@ -43,11 +42,7 @@ EVENT_SCHEMA = StructType(
 
 
 def event_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
+    return file_stream(spark, input_dir, EVENT_SCHEMA)
 
 
 def windowed_counts(stream: DataFrame, watermark: str = "2 days") -> DataFrame:
@@ -254,21 +249,6 @@ class ReachSketchMaintainer(GenerationalState):
         self.commit(spark, merged.localCheckpoint(eager=True), batch_id)
 
 
-def run_reach_sketch_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Drain the events feed into the sketch state table
-    (availableNow; production uses a processing-time trigger)."""
-    handler = ReachSketchMaintainer(state_dir)
-    return drain(
-        event_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )
-
-
 def reach_from_sketch_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Per-event-type reach served from the sketch state table alone —
     a rollup over sketch bytes (union across days), no raw-event scan.
@@ -448,23 +428,6 @@ class DpCountsRelease:
         write_batch(release, self.out_dir, batch_id)
 
 
-def run_dp_counts_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint: str,
-    epsilon: float = 0.1,
-) -> StreamingQuery:
-    """Drain the events feed through the DP release (availableNow; a
-    production deployment uses a processing-time trigger at the
-    release cadence the ε budget was priced for)."""
-    handler = DpCountsRelease(out_dir, epsilon)
-    return drain(
-        event_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )
-
-
 class BenfordMonitor:
     """foreachBatch handler for a streaming fabricated-data screen
     (r9): each micro-batch's value population is run through
@@ -526,23 +489,6 @@ def benford_lifetime(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def run_benford_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint: str,
-    alert_excess: float = 0.05,
-) -> StreamingQuery:
-    """Drain the events feed through the Benford monitor
-    (availableNow; production uses a processing-time trigger at the
-    monitoring cadence)."""
-    handler = BenfordMonitor(out_dir, alert_excess)
-    return drain(
-        event_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )
-
-
 def init_ks_index(
     spark: SparkSession, events: DataFrame, base_path: str
 ) -> None:
@@ -598,19 +544,3 @@ class ValueDriftMonitor:
         release = ks_drift_counts(batch_counts, lifetime)
         write_batch(release.coalesce(1), self.out_dir, batch_id)
         write_batch(batch_counts.coalesce(4), f"{self.base}/counts", batch_id)
-
-
-def run_value_drift_stream(
-    spark: SparkSession,
-    input_dir: str,
-    base_path: str,
-    out_dir: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Drain the events feed through the value-drift monitor
-    (availableNow trigger)."""
-    handler = ValueDriftMonitor(base_path, out_dir)
-    return drain(
-        event_stream(spark, input_dir).writeStream.foreachBatch(handler),
-        checkpoint,
-    )

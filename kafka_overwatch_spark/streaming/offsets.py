@@ -45,7 +45,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .state import drain
+from .state import file_stream
 
 OFFSET_SCHEMA = StructType(
     [
@@ -73,11 +73,7 @@ DELTA_SCHEMA = StructType(
 def offset_sample_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """The offset-watermark feed as a stream (one parquet file per scan in
     tests; a Kafka metadata collector topic in production)."""
-    return (
-        spark.readStream.schema(OFFSET_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
+    return file_stream(spark, input_dir, OFFSET_SCHEMA)
 
 
 def new_messages_vs_baseline(
@@ -453,11 +449,7 @@ LAG_STATE_SCHEMA = StructType(
 def lag_sample_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """The unified collector feed (watermark + committed-offset samples)
     as a stream; one parquet file per micro-batch in tests."""
-    return (
-        spark.readStream.schema(LAG_SAMPLE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
+    return file_stream(spark, input_dir, LAG_SAMPLE_SCHEMA)
 
 
 def _lag_rows_from_caches(
@@ -556,16 +548,3 @@ def streaming_lag(stream: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_to_completion(stream_df: DataFrame, checkpoint: str) -> list:
-    """Drain a stream with availableNow into an in-memory table; returns
-    the collected rows (test helper)."""
-    name = "stream_out_" + checkpoint.replace("/", "_").strip("_")[-32:]
-    drain(
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append"),
-        checkpoint,
-    )
-    return stream_df.sparkSession.table(name).collect()

@@ -21,11 +21,8 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .offsets import OFFSET_SCHEMA, offset_sample_stream
-from .state import drain
 
 
 class StreamingUsageReporter:
@@ -131,23 +128,3 @@ class StreamingUsageReporter:
                 indent=2,
             )
         self.reports_emitted += 1
-
-
-def run_usage_report_stream(
-    spark: SparkSession,
-    input_dir: str,
-    baseline: DataFrame,
-    checkpoint: str,
-    output_dir: str,
-    evaluate_every: int = 2,
-    expire_after_batches: int | None = None,
-):
-    """Drain the stream: one file per trigger (≙ one scan per interval),
-    reports every `evaluate_every` scans. Returns the drained query and
-    the reporter."""
-    reporter = StreamingUsageReporter(
-        baseline, output_dir, evaluate_every, expire_after_batches
-    )
-    stream = offset_sample_stream(spark, input_dir)
-    q = drain(stream.writeStream.foreachBatch(reporter), checkpoint)
-    return q, reporter

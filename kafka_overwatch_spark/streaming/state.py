@@ -1,10 +1,14 @@
 """Shared plumbing for the streaming monitors and screens.
 
-``file_stream`` is the parquet feed every documents and embeddings
-handler reads; ``drain`` runs a configured stream to completion with
-availableNow and fails loudly on timeout; ``write_batch`` is the
-replay-safe per-batch write every foreachBatch handler appends its
-output with.
+``file_stream`` is the one parquet file feed (documents, embeddings,
+events, offset and lag samples, change feeds); ``drain`` runs a
+configured stream to completion with availableNow and fails loudly on
+timeout; ``run`` is the one way a screen or monitor is started: it
+hands each micro-batch of a feed to a foreachBatch handler and drains;
+``write_batch`` is the replay-safe per-batch write every foreachBatch
+handler appends its output with. A drained query's ``recentProgress``
+holds one entry per batch (``batchId``, ``numInputRows``), so the
+per-batch record costs no extra job.
 
 Persisted indexes (the growing screens' corpora, the monitors'
 lifetime state) share one batch_id-partitioned layout, defined here
@@ -41,18 +45,27 @@ tests/test_events_stream.py::test_reach_sketch_state_commit_protocol.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import StructType
 
 DRAIN_TIMEOUT_S = 300
 
 
-def file_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+def file_stream(
+    spark: SparkSession,
+    input_dir: str,
+    schema: StructType | str | None = None,
+) -> DataFrame:
     """File stream of parquet rows, one file per trigger (arrival order
-    is file order); schema pinned from a static footer read (streaming
-    sources require an explicit schema)."""
-    schema = spark.read.parquet(input_dir).schema
+    is file order). Streaming sources require an explicit schema: pass
+    ``schema`` (a StructType or DDL string) for a feed that may start
+    empty, otherwise it is read from the files' footers."""
+    if schema is None:
+        schema = spark.read.parquet(input_dir).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -77,6 +90,15 @@ def drain(writer: DataStreamWriter, checkpoint: str) -> StreamingQuery:
             f"{DRAIN_TIMEOUT_S}s"
         )
     return q
+
+
+def run(
+    handler: Callable[[DataFrame, int], None],
+    feed: DataFrame,
+    checkpoint: str,
+) -> StreamingQuery:
+    """Hand every micro-batch of ``feed`` to ``handler`` and drain."""
+    return drain(feed.writeStream.foreachBatch(handler), checkpoint)
 
 
 def write_batch(

@@ -19,11 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
 from ..operators.relational import scd1_upsert
-from .state import GenerationalState, drain
+from .state import GenerationalState
 
 
 class Scd1DimensionMaintainer(GenerationalState):
@@ -59,27 +58,6 @@ class Scd1DimensionMaintainer(GenerationalState):
             else scd1_upsert(target, updates, self.keys)
         )
         self.commit(spark, merged.localCheckpoint(eager=True), batch_id)
-
-
-def run_scd1_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint: str,
-    keys: list[str],
-    order_col: str,
-) -> StreamingQuery:
-    """Drain a change-feed directory (one file per trigger) through the
-    maintainer with availableNow — the file-source stand-in for the
-    Kafka config-changes topic."""
-    maintainer = Scd1DimensionMaintainer(state_dir, keys, order_col)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    return drain(stream.writeStream.foreachBatch(maintainer), checkpoint)
 
 
 class HeavyHitterSketchMaintainer(GenerationalState):

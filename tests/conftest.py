@@ -62,6 +62,21 @@ def snaps(spark):
     return get_snaps(spark, SF_DIR)
 
 
+def run_to_completion(stream_df, checkpoint: str) -> list:
+    """Drain a stream with availableNow into an in-memory table and
+    return the collected rows."""
+    from kafka_overwatch_spark.streaming.state import drain
+
+    name = "stream_out_" + checkpoint.replace("/", "_").strip("_")[-32:]
+    drain(
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append"),
+        checkpoint,
+    )
+    return stream_df.sparkSession.table(name).collect()
+
+
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in RAW_TABLES:

@@ -8,7 +8,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, run_to_completion
 
 
 def _split_events(spark, tmp, parts=4, duplicate_last=False):
@@ -37,7 +37,6 @@ def _split_events(spark, tmp, parts=4, duplicate_last=False):
 
 def test_windowed_counts_match_batch(spark, snaps):
     from kafka_overwatch_spark.streaming import events_stream as es
-    from kafka_overwatch_spark.streaming.offsets import run_to_completion
 
     with tempfile.TemporaryDirectory() as tmp:
         ev = _split_events(spark, tmp)
@@ -75,7 +74,6 @@ def test_windowed_counts_match_batch(spark, snaps):
 
 def test_streaming_dedup_drops_replayed_batch(spark, snaps):
     from kafka_overwatch_spark.streaming import events_stream as es
-    from kafka_overwatch_spark.streaming.offsets import run_to_completion
 
     with tempfile.TemporaryDirectory() as tmp:
         ev = _split_events(spark, tmp, duplicate_last=True)
@@ -98,8 +96,9 @@ def test_streaming_contamination_matches_batch(spark, snaps):
         probe_shingles,
     )
     from kafka_overwatch_spark.streaming.documents_stream import (
-        run_contamination_screen,
+        ContaminationScreen,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     docs = spark.table("documents")
     probes = probe_shingles(docs)
@@ -110,8 +109,10 @@ def test_streaming_contamination_matches_batch(spark, snaps):
             docs.filter(
                 (F.col("doc_id") >= i * per) & (F.col("doc_id") < (i + 1) * per)
             ).coalesce(1).write.mode("append").parquet(f"{tmp}/in")
-        run_contamination_screen(
-            spark, f"{tmp}/in", probes, f"{tmp}/out", f"{tmp}/ck"
+        run(
+            ContaminationScreen(probes, f"{tmp}/out"),
+            file_stream(spark, f"{tmp}/in"),
+            f"{tmp}/ck",
         )
         streamed = sorted(
             tuple(r)
@@ -131,7 +132,6 @@ def test_streaming_sessionize_matches_python_closed_sessions(spark, snaps):
     import tempfile
 
     from kafka_overwatch_spark.streaming import events_stream as es
-    from kafka_overwatch_spark.streaming.offsets import run_to_completion
 
     gap = 3600
     with tempfile.TemporaryDirectory() as tmp:
@@ -189,9 +189,8 @@ def test_streaming_dedup_screen_matches_batch(spark, snaps):
         incremental_minhash_screen,
         shingle_docs,
     )
-    from kafka_overwatch_spark.streaming.documents_stream import (
-        run_dedup_screen,
-    )
+    from kafka_overwatch_spark.streaming.documents_stream import DedupScreen
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     docs = spark.table("documents")
     corpus_sh = shingle_docs(
@@ -206,8 +205,10 @@ def test_streaming_dedup_screen_matches_batch(spark, snaps):
                 (F.col("doc_id") >= n_lo + i * per)
                 & (F.col("doc_id") < n_lo + (i + 1) * per)
             ).coalesce(1).write.mode("append").parquet(f"{tmp}/in")
-        run_dedup_screen(
-            spark, f"{tmp}/in", corpus_sh, f"{tmp}/out", f"{tmp}/ck"
+        run(
+            DedupScreen(corpus_sh, f"{tmp}/out"),
+            file_stream(spark, f"{tmp}/in"),
+            f"{tmp}/ck",
         )
         streamed = sorted(
             tuple(r)
@@ -228,7 +229,6 @@ def test_streaming_sessionize_monotonic_ids_across_timeout(spark, snaps):
     import tempfile
 
     from kafka_overwatch_spark.streaming import events_stream as es
-    from kafka_overwatch_spark.streaming.offsets import run_to_completion
 
     base = datetime.datetime(2024, 1, 1)
 
@@ -272,11 +272,16 @@ def test_streaming_sketch_state_matches_batch_reach(spark, snaps):
         events_user_reach_sketch,
     )
     from kafka_overwatch_spark.streaming import events_stream as es
+    from kafka_overwatch_spark.streaming.state import run
 
     with tempfile.TemporaryDirectory() as tmp:
         _split_events(spark, tmp, parts=3)
         state = f"{tmp}/sketch_state"
-        es.run_reach_sketch_stream(spark, f"{tmp}/in", state, f"{tmp}/ckpt")
+        run(
+            es.ReachSketchMaintainer(state),
+            es.event_stream(spark, f"{tmp}/in"),
+            f"{tmp}/ckpt",
+        )
         streamed = {
             r["event_type"]: r["sketch_users"]
             for r in es.reach_from_sketch_state(spark, state).collect()
@@ -355,7 +360,6 @@ def test_streaming_click_attribution_matches_batch(spark, snaps):
         events_preceding_window_join,
     )
     from kafka_overwatch_spark.streaming import events_stream as es
-    from kafka_overwatch_spark.streaming.offsets import run_to_completion
 
     with tempfile.TemporaryDirectory() as tmp:
         ev = _split_events(spark, tmp)
@@ -567,7 +571,6 @@ def test_streaming_session_windows_match_batch_native(spark, snaps):
         events_session_window_native,
     )
     from kafka_overwatch_spark.streaming import events_stream as es
-    from kafka_overwatch_spark.streaming.offsets import run_to_completion
 
     with tempfile.TemporaryDirectory() as tmp:
         ev = _split_events(spark, tmp)
@@ -611,7 +614,6 @@ def test_streaming_dedup_within_watermark_bounded_state(spark, snaps):
     the state-forever form (duplicates arrive within the horizon), while
     evicting old keys — streamed distinct count equals the batch one."""
     from kafka_overwatch_spark.streaming import events_stream as es
-    from kafka_overwatch_spark.streaming.offsets import run_to_completion
 
     with tempfile.TemporaryDirectory() as tmp:
         ev = _split_events(spark, tmp, duplicate_last=True)

@@ -86,9 +86,11 @@ def test_vanished_topic_expires_from_state(spark, snaps):
     import glob
     import json
 
+    from kafka_overwatch_spark.streaming.offsets import offset_sample_stream
     from kafka_overwatch_spark.streaming.report_stream import (
-        run_usage_report_stream,
+        StreamingUsageReporter,
     )
+    from kafka_overwatch_spark.streaming.state import run
 
     with tempfile.TemporaryDirectory() as tmp:
         po = snaps["partition_offsets"]
@@ -101,15 +103,13 @@ def test_vanished_topic_expires_from_state(spark, snaps):
             if scan > 0:
                 df = df.filter(F.col("topic") != victim)
             df.coalesce(1).write.mode("append").parquet(f"{tmp}/in")
-        q, reporter = run_usage_report_stream(
-            spark,
-            f"{tmp}/in",
+        reporter = StreamingUsageReporter(
             po.filter(F.col("scan_id") == 0),
-            f"{tmp}/ck",
             f"{tmp}/reports",
             evaluate_every=4,
             expire_after_batches=2,
         )
+        run(reporter, offset_sample_stream(spark, f"{tmp}/in"), f"{tmp}/ck")
         assert any(t == victim for t, _ in reporter.expired_keys)
         report = json.load(
             open(sorted(glob.glob(f"{tmp}/reports/report_batch_*.json"))[-1])

@@ -117,9 +117,10 @@ def test_semantic_screen_consumes_tuned_config(spark):
     from kafka_overwatch_spark.pipelines.encode import encode_documents
     from kafka_overwatch_spark.pipelines.similarity import choose_ann_config
     from kafka_overwatch_spark.streaming.documents_stream import (
+        GrowingSemanticScreen,
         init_semantic_index,
-        run_growing_semantic,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     def docs(rows):
         return spark.createDataFrame(
@@ -151,13 +152,15 @@ def test_semantic_screen_consumes_tuned_config(spark):
         init_semantic_index(
             spark, corpus, f"{tmp}/index", bits=bits, tables=tables
         )
-        run_growing_semantic(
-            spark,
-            f"{tmp}/feed",
-            f"{tmp}/index",
-            f"{tmp}/q",
+        run(
+            GrowingSemanticScreen(
+                f"{tmp}/index",
+                f"{tmp}/q",
+                bits=bits,
+                tables=tables,
+            ),
+            file_stream(spark, f"{tmp}/feed"),
             f"{tmp}/ckpt",
-            ann_config=cfg,
         )
         kept = sorted(
             r.vec_id

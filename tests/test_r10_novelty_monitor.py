@@ -28,9 +28,10 @@ TEMPLATE = "buy cheap widgets now visit our store today please"
 
 def test_novelty_monitor_readstream_replay_and_collapse(spark, tmp_path):
     from kafka_overwatch_spark.streaming.documents_stream import (
+        NoveltyMonitor,
         init_novelty_index,
-        run_novelty_monitor,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     in_dir = str(tmp_path / "in")
     base = str(tmp_path / "idx")
@@ -47,7 +48,7 @@ def test_novelty_monitor_readstream_replay_and_collapse(spark, tmp_path):
     # verbatim (novelty 0 → alert)
     _write_docs(spark, in_dir, [UNIQ1, UNIQ2], 0)
     _write_docs(spark, in_dir, [TEMPLATE, TEMPLATE], 100)
-    run_novelty_monitor(spark, in_dir, base, out_dir, ckpt)
+    run(NoveltyMonitor(base, out_dir), file_stream(spark, in_dir), ckpt)
 
     rel = {
         r["batch_id"]: r for r in spark.read.parquet(out_dir).collect()
@@ -64,7 +65,7 @@ def test_novelty_monitor_readstream_replay_and_collapse(spark, tmp_path):
     idx_before = sorted(
         r["g"] for r in spark.read.parquet(f"{base}/grams").collect()
     )
-    run_novelty_monitor(spark, in_dir, base, out_dir, ckpt)
+    run(NoveltyMonitor(base, out_dir), file_stream(spark, in_dir), ckpt)
     after = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
     idx_after = sorted(
         r["g"] for r in spark.read.parquet(f"{base}/grams").collect()
@@ -73,7 +74,7 @@ def test_novelty_monitor_readstream_replay_and_collapse(spark, tmp_path):
 
     # batch 2 repeats batch 0's text: all grams now in the index
     _write_docs(spark, in_dir, [UNIQ1], 200)
-    run_novelty_monitor(spark, in_dir, base, out_dir, ckpt)
+    run(NoveltyMonitor(base, out_dir), file_stream(spark, in_dir), ckpt)
     rel2 = {
         r["batch_id"]: r for r in spark.read.parquet(out_dir).collect()
     }

@@ -38,9 +38,11 @@ def test_benford_monitor_through_readstream(spark, tmp_path):
     no-op; a third file appends exactly one more batch."""
     from kafka_overwatch_spark.operators.relational import benford_audit
     from kafka_overwatch_spark.streaming.events_stream import (
+        BenfordMonitor,
         benford_lifetime,
-        run_benford_stream,
+        event_stream,
     )
+    from kafka_overwatch_spark.streaming.state import run
 
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
@@ -49,7 +51,7 @@ def test_benford_monitor_through_readstream(spark, tmp_path):
     b = [9.5, 0.92, 23.0, 1.7]
     _write_events(spark, in_dir, a, 0)
     _write_events(spark, in_dir, b, 100)
-    run_benford_stream(spark, in_dir, out_dir, ckpt)
+    run(BenfordMonitor(out_dir), event_stream(spark, in_dir), ckpt)
 
     rel = spark.read.parquet(out_dir)
     assert {r["batch_id"] for r in rel.select("batch_id").distinct().collect()} == {0, 1}
@@ -67,14 +69,14 @@ def test_benford_monitor_through_readstream(spark, tmp_path):
 
     # checkpoint replay with nothing new: releases byte-stable
     before = sorted(map(tuple, rel.collect()))
-    run_benford_stream(spark, in_dir, out_dir, ckpt)
+    run(BenfordMonitor(out_dir), event_stream(spark, in_dir), ckpt)
     after = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
     assert before == after
 
     # one more file -> exactly one more batch, lifetime still exact
     c = [5.5, 6.01, 1.1]
     _write_events(spark, in_dir, c, 200)
-    run_benford_stream(spark, in_dir, out_dir, ckpt)
+    run(BenfordMonitor(out_dir), event_stream(spark, in_dir), ckpt)
     rel2 = spark.read.parquet(out_dir)
     assert rel2.select("batch_id").distinct().count() == 3
     static2 = spark.read.parquet(in_dir)
@@ -93,9 +95,10 @@ def test_quality_drift_monitor_through_readstream(spark, tmp_path):
     construction; checkpoint replay is a no-op."""
     from kafka_overwatch_spark.pipelines.text import quality_columns
     from kafka_overwatch_spark.streaming.documents_stream import (
+        QualityDriftMonitor,
         quality_drift_from_releases,
-        run_quality_drift,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
@@ -119,7 +122,7 @@ def test_quality_drift_monitor_through_readstream(spark, tmp_path):
             (4, "Another perfectly normal document body of text.", "en", "web", 47),
         ]
     )
-    run_quality_drift(spark, in_dir, out_dir, ckpt)
+    run(QualityDriftMonitor(out_dir), file_stream(spark, in_dir), ckpt)
 
     drift = quality_drift_from_releases(spark, out_dir).orderBy("batch_id")
     rows = drift.collect()
@@ -140,6 +143,6 @@ def test_quality_drift_monitor_through_readstream(spark, tmp_path):
 
     # checkpoint replay: no new files -> byte-stable releases
     before = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
-    run_quality_drift(spark, in_dir, out_dir, ckpt)
+    run(QualityDriftMonitor(out_dir), file_stream(spark, in_dir), ckpt)
     after = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
     assert before == after

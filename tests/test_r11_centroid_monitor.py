@@ -26,9 +26,10 @@ def test_centroid_monitor_readstream_replay_and_alert(
     from pyspark.sql.conf import RuntimeConfig
 
     from kafka_overwatch_spark.streaming.embeddings_stream import (
+        CentroidDriftMonitor,
         init_centroid_index,
-        run_centroid_monitor,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     # handlers must get dynamic overwrite from the write option alone,
     # never by mutating session conf
@@ -54,7 +55,7 @@ def test_centroid_monitor_readstream_replay_and_alert(
     # batch 1: orthogonal flood — cosine vs (+x)-dominated lifetime
     # collapses, alert fires
     _write(spark, in_dir, [(100 + i, [0.0, 1.0], 0) for i in range(10)])
-    run_centroid_monitor(spark, in_dir, base, out_dir, ckpt)
+    run(CentroidDriftMonitor(base, out_dir), file_stream(spark, in_dir), ckpt)
 
     rel = {
         r["batch_id"]: r for r in spark.read.parquet(out_dir).collect()
@@ -72,12 +73,14 @@ def test_centroid_monitor_readstream_replay_and_alert(
     state_before = sorted(
         map(tuple, spark.read.parquet(f"{base}/sums").collect())
     )
-    run_centroid_monitor(
-        spark, in_dir, base, out_dir, str(tmp_path / "ck2")
+    run(
+        CentroidDriftMonitor(base, out_dir),
+        file_stream(spark, in_dir),
+        str(tmp_path / "ck2"),
     )
     # a fresh checkpoint re-feeds every file as new batches — use the
     # SAME checkpoint for the true replay contract instead
-    run_centroid_monitor(spark, in_dir, base, out_dir, ckpt)
+    run(CentroidDriftMonitor(base, out_dir), file_stream(spark, in_dir), ckpt)
     after_same_ckpt = sorted(
         map(tuple, spark.read.parquet(out_dir).collect())
     )
@@ -104,9 +107,10 @@ def test_centroid_monitor_release_matches_library(spark, tmp_path):
         quantized_dim_sums,
     )
     from kafka_overwatch_spark.streaming.embeddings_stream import (
+        CentroidDriftMonitor,
         init_centroid_index,
-        run_centroid_monitor,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     in_dir = str(tmp_path / "in")
     base = str(tmp_path / "idx")
@@ -115,8 +119,10 @@ def test_centroid_monitor_release_matches_library(spark, tmp_path):
     batch_rows = [(i, [0.8, 0.6], 1) for i in range(4)]
     init_centroid_index(spark, _embs(spark, seed_rows), base)
     _write(spark, in_dir, batch_rows)
-    run_centroid_monitor(
-        spark, in_dir, base, out_dir, str(tmp_path / "ck")
+    run(
+        CentroidDriftMonitor(base, out_dir),
+        file_stream(spark, in_dir),
+        str(tmp_path / "ck"),
     )
     got = spark.read.parquet(out_dir).drop("batch_id").collect()[0]
     want = centroid_drift(

@@ -25,9 +25,10 @@ def _write_docs(spark, path, rows):
 
 def test_keyness_monitor_readstream_replay_and_alert(spark, tmp_path):
     from kafka_overwatch_spark.streaming.documents_stream import (
+        KeynessDriftMonitor,
         init_keyness_index,
-        run_keyness_monitor,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     in_dir = str(tmp_path / "in")
     base = str(tmp_path / "idx")
@@ -45,7 +46,7 @@ def test_keyness_monitor_readstream_replay_and_alert(spark, tmp_path):
     _write_docs(
         spark, in_dir, [(100 + i, SPAM, "s") for i in range(10)]
     )
-    run_keyness_monitor(spark, in_dir, base, out_dir, ckpt)
+    run(KeynessDriftMonitor(base, out_dir), file_stream(spark, in_dir), ckpt)
 
     rel = {
         r["batch_id"]: r for r in spark.read.parquet(out_dir).collect()
@@ -61,7 +62,7 @@ def test_keyness_monitor_readstream_replay_and_alert(spark, tmp_path):
     idx_before = sorted(
         map(tuple, spark.read.parquet(f"{base}/counts").collect())
     )
-    run_keyness_monitor(spark, in_dir, base, out_dir, ckpt)
+    run(KeynessDriftMonitor(base, out_dir), file_stream(spark, in_dir), ckpt)
     after = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
     idx_after = sorted(
         map(tuple, spark.read.parquet(f"{base}/counts").collect())
@@ -74,7 +75,7 @@ def test_keyness_monitor_readstream_replay_and_alert(spark, tmp_path):
     _write_docs(
         spark, in_dir, [(300 + i, SPAM, "s") for i in range(10)]
     )
-    run_keyness_monitor(spark, in_dir, base, out_dir, ckpt)
+    run(KeynessDriftMonitor(base, out_dir), file_stream(spark, in_dir), ckpt)
     rel2 = {
         r["batch_id"]: r for r in spark.read.parquet(out_dir).collect()
     }
@@ -92,9 +93,10 @@ def test_keyness_monitor_release_equals_batch_twin(spark, tmp_path):
         source_token_counts,
     )
     from kafka_overwatch_spark.streaming.documents_stream import (
+        KeynessDriftMonitor,
         init_keyness_index,
-        run_keyness_monitor,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     in_dir = str(tmp_path / "in")
     base = str(tmp_path / "idx")
@@ -108,7 +110,7 @@ def test_keyness_monitor_release_equals_batch_twin(spark, tmp_path):
     batch = [(i, BASE + " drifted tokens appended", "s") for i in range(6)]
     init_keyness_index(spark, seed, base)
     _write_docs(spark, in_dir, batch)
-    run_keyness_monitor(spark, in_dir, base, out_dir, ckpt)
+    run(KeynessDriftMonitor(base, out_dir), file_stream(spark, in_dir), ckpt)
 
     got = sorted(
         map(

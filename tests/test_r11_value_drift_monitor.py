@@ -38,9 +38,11 @@ BASE_VALS = [float(v) for v in (1, 2, 3, 4, 5) * 8]  # 40 baseline rows
 
 def test_value_drift_monitor_readstream(spark, tmp_path):
     from kafka_overwatch_spark.streaming.events_stream import (
+        ValueDriftMonitor,
+        event_stream,
         init_ks_index,
-        run_value_drift_stream,
     )
+    from kafka_overwatch_spark.streaming.state import run
 
     in_dir = str(tmp_path / "in")
     base = str(tmp_path / "idx")
@@ -57,7 +59,7 @@ def test_value_drift_monitor_readstream(spark, tmp_path):
     _write(
         spark, in_dir, [("click", 100.0 + v) for v in BASE_VALS], 1000
     )
-    run_value_drift_stream(spark, in_dir, base, out_dir, ckpt)
+    run(ValueDriftMonitor(base, out_dir), event_stream(spark, in_dir), ckpt)
 
     rel = {
         r["batch_id"]: r for r in spark.read.parquet(out_dir).collect()
@@ -73,7 +75,7 @@ def test_value_drift_monitor_readstream(spark, tmp_path):
     idx_before = sorted(
         map(tuple, spark.read.parquet(f"{base}/counts").collect())
     )
-    run_value_drift_stream(spark, in_dir, base, out_dir, ckpt)
+    run(ValueDriftMonitor(base, out_dir), event_stream(spark, in_dir), ckpt)
     assert before == sorted(
         map(tuple, spark.read.parquet(out_dir).collect())
     )
@@ -87,9 +89,11 @@ def test_value_drift_release_equals_batch_twin(spark, tmp_path):
         ks_drift_counts,
     )
     from kafka_overwatch_spark.streaming.events_stream import (
+        ValueDriftMonitor,
+        event_stream,
         init_ks_index,
-        run_value_drift_stream,
     )
+    from kafka_overwatch_spark.streaming.state import run
 
     in_dir = str(tmp_path / "in")
     base = str(tmp_path / "idx")
@@ -104,7 +108,7 @@ def test_value_drift_release_equals_batch_twin(spark, tmp_path):
     seed = _events(spark, seed_rows, start_id=10_000)
     init_ks_index(spark, seed, base)
     _write(spark, in_dir, batch_rows, 0)
-    run_value_drift_stream(spark, in_dir, base, out_dir, ckpt)
+    run(ValueDriftMonitor(base, out_dir), event_stream(spark, in_dir), ckpt)
 
     counts = lambda df: (  # noqa: E731
         df.filter(F.col("value").isNotNull())

@@ -369,8 +369,10 @@ def test_streaming_dp_release_end_to_end(spark, tmp_path):
     import shutil as _shutil
 
     from kafka_overwatch_spark.streaming.events_stream import (
-        run_dp_counts_stream,
+        DpCountsRelease,
+        event_stream,
     )
+    from kafka_overwatch_spark.streaming.state import run
 
     ev = spark.createDataFrame(
         [(i, i % 3, dt.datetime(2024, 1, 1, 9), "click", 1.0)
@@ -382,8 +384,10 @@ def test_streaming_dp_release_end_to_end(spark, tmp_path):
     ev.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "in"))
     src = _glob.glob(str(tmp_path / "in" / "part-*.parquet"))[0]
     _shutil.copy(src, f"{feed}/0000.parquet")
-    run_dp_counts_stream(
-        spark, feed, str(tmp_path / "out"), str(tmp_path / "ckpt")
+    run(
+        DpCountsRelease(str(tmp_path / "out")),
+        event_stream(spark, feed),
+        str(tmp_path / "ckpt"),
     )
     rows = spark.read.parquet(str(tmp_path / "out")).collect()
     assert len(rows) == 1 and rows[0]["event_type"] == "click"

@@ -125,9 +125,11 @@ def test_streaming_two_tier_report_cadence(spark, snaps):
 
     from pyspark.sql import functions as F
 
+    from kafka_overwatch_spark.streaming.offsets import offset_sample_stream
     from kafka_overwatch_spark.streaming.report_stream import (
-        run_usage_report_stream,
+        StreamingUsageReporter,
     )
+    from kafka_overwatch_spark.streaming.state import run
 
     with tempfile.TemporaryDirectory() as tmp:
         po = snaps["partition_offsets"]
@@ -136,14 +138,10 @@ def test_streaming_two_tier_report_cadence(spark, snaps):
                 "append"
             ).parquet(f"{tmp}/in")
         baseline = po.filter(F.col("scan_id") == 0)
-        q, reporter = run_usage_report_stream(
-            spark,
-            f"{tmp}/in",
-            baseline,
-            f"{tmp}/ckpt",
-            f"{tmp}/reports",
-            evaluate_every=2,
+        reporter = StreamingUsageReporter(
+            baseline, f"{tmp}/reports", evaluate_every=2
         )
+        run(reporter, offset_sample_stream(spark, f"{tmp}/in"), f"{tmp}/ckpt")
         reports = sorted(glob.glob(f"{tmp}/reports/report_batch_*.json"))
         # 4 scan batches, evaluate every 2 → 2 reports
         assert len(reports) == 2

@@ -7,6 +7,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from tests.conftest import run_to_completion
+
 
 def _replay_dir(spark, snaps, tmp):
     """Write one parquet file per scan (the stream replays scan by scan)."""
@@ -31,7 +33,7 @@ def test_stateful_w1_deltas_match_batch(spark, snaps):
                 "append"
             ).parquet(f"{tmp}/in")
         stream = so.offset_sample_stream(spark, f"{tmp}/in")
-        out = so.run_to_completion(
+        out = run_to_completion(
             so.per_interval_deltas(stream), f"{tmp}/ckpt1"
         )
         got = {
@@ -63,7 +65,7 @@ def test_stateful_w3_first_offset_matches_batch(spark, snaps):
                 "append"
             ).parquet(f"{tmp}/in")
         stream = so.offset_sample_stream(spark, f"{tmp}/in")
-        out = so.run_to_completion(
+        out = run_to_completion(
             so.first_offset_evolution_stream(stream), f"{tmp}/ckpt3"
         )
         # final drift per partition = max over scans
@@ -109,7 +111,7 @@ def test_state_timeout_expires_vanished_partition(spark, snaps):
                     os.utime(f, (t0 + scan, t0 + scan))
                     seen.add(f)
         stream = so.offset_sample_stream(spark, f"{tmp}/in")
-        out = so.run_to_completion(
+        out = run_to_completion(
             so.vanished_entity_stream(stream), f"{tmp}/ckpt4"
         )
         expired = {
@@ -193,7 +195,7 @@ def test_baseline_join_w2_matches_batch(spark, snaps):
             ).parquet(f"{tmp}/in")
         baseline = po.filter(F.col("scan_id") == 0)
         stream = so.offset_sample_stream(spark, f"{tmp}/in")
-        out = so.run_to_completion(
+        out = run_to_completion(
             so.new_messages_vs_baseline(stream, baseline), f"{tmp}/ckpt2"
         )
         got = {
@@ -301,7 +303,7 @@ def test_stateful_query_under_rocksdb_state_store(spark, snaps):
                     "append"
                 ).parquet(f"{tmp}/in")
             stream = so.offset_sample_stream(spark, f"{tmp}/in")
-            out = so.run_to_completion(
+            out = run_to_completion(
                 so.per_interval_deltas(stream), f"{tmp}/ckpt_rocks"
             )
             from kafka_overwatch_spark.operators.windows import (
@@ -377,7 +379,7 @@ def test_streaming_lag_matches_batch_lag_per_partition(spark, snaps):
                 if f not in seen:
                     os.utime(f, (t0 + i, t0 + i))
                     seen.add(f)
-        out = so.run_to_completion(
+        out = run_to_completion(
             so.streaming_lag(so.lag_sample_stream(spark, f"{tmp}/in")),
             f"{tmp}/ckpt_lag",
         )

@@ -59,9 +59,10 @@ def _sequential_reference(spark, corpus_docs, batches):
 def test_containment_stream_equals_sequential(spark):
     from kafka_overwatch_spark.pipelines.dedup import shingle_docs
     from kafka_overwatch_spark.streaming.documents_stream import (
+        GrowingContainmentScreen,
         init_containment_index,
-        run_growing_containment,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     corpus = docs.filter(F.col("doc_id") < 200)
@@ -82,13 +83,14 @@ def test_containment_stream_equals_sequential(spark):
             os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
 
         init_containment_index(spark, shingle_docs(corpus), f"{tmp}/index")
-        run_growing_containment(
-            spark,
-            f"{tmp}/feed",
-            f"{tmp}/index",
-            f"{tmp}/quarantine",
+        run(
+            GrowingContainmentScreen(
+                f"{tmp}/index",
+                f"{tmp}/quarantine",
+                THRESHOLD,
+            ),
+            file_stream(spark, f"{tmp}/feed"),
             f"{tmp}/ckpt",
-            threshold=THRESHOLD,
         )
         streamed_kept = sorted(
             r.doc_id

@@ -18,9 +18,10 @@ from tests.conftest import SF_DIR
 def test_streaming_dsir_screen_equals_batch_scores(spark):
     from kafka_overwatch_spark.pipelines.sampling import dsir_weights
     from kafka_overwatch_spark.streaming.documents_stream import (
-        run_dsir_screen,
+        DsirScreen,
         write_dsir_lm,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "n_chars", "lang", "source"
@@ -37,9 +38,14 @@ def test_streaming_dsir_screen_equals_batch_scores(spark):
             dst = f"{tmp}/feed/{i:04d}.parquet"
             shutil.copy(src, dst)
             os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        run_dsir_screen(
-            spark, f"{tmp}/feed", f"{tmp}/model", f"{tmp}/out", f"{tmp}/ck",
-            tau=tau,
+        run(
+            DsirScreen(
+                spark.read.parquet(f"{tmp}/model/dsir_lm"),
+                f"{tmp}/out",
+                tau,
+            ),
+            file_stream(spark, f"{tmp}/feed"),
+            f"{tmp}/ck",
         )
         got = {
             r["doc_id"]: (r["n_tokens"], r["log_ratio"], r["keep"])

@@ -56,9 +56,10 @@ def _sequential_reference(spark, corpus_docs, batches):
 def test_growing_dedup_stream_equals_sequential(spark):
     from kafka_overwatch_spark.pipelines.dedup import shingle_docs
     from kafka_overwatch_spark.streaming.documents_stream import (
+        GrowingDedupScreen,
         init_growing_index,
-        run_growing_dedup,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     corpus = docs.filter(F.col("doc_id") < 200)
@@ -93,8 +94,10 @@ def test_growing_dedup_stream_equals_sequential(spark):
             os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
 
         init_growing_index(spark, shingle_docs(corpus), f"{tmp}/index")
-        run_growing_dedup(
-            spark, f"{tmp}/feed", f"{tmp}/index", f"{tmp}/ckpt"
+        run(
+            GrowingDedupScreen(f"{tmp}/index"),
+            file_stream(spark, f"{tmp}/feed"),
+            f"{tmp}/ckpt",
         )
         streamed_kept = sorted(
             r.doc_id

@@ -92,9 +92,10 @@ def _sequential_reference(spark, corpus, batches, threshold=0.9):
 
 def test_growing_semantic_stream_equals_sequential(spark):
     from kafka_overwatch_spark.streaming.documents_stream import (
+        GrowingSemanticScreen,
         init_semantic_index,
-        run_growing_semantic,
     )
+    from kafka_overwatch_spark.streaming.state import file_stream, run
 
     corpus, batches = _corpus_and_batches(spark)
     with tempfile.TemporaryDirectory() as tmp:
@@ -107,8 +108,10 @@ def test_growing_semantic_stream_equals_sequential(spark):
             os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
 
         init_semantic_index(spark, corpus, f"{tmp}/index")
-        run_growing_semantic(
-            spark, f"{tmp}/feed", f"{tmp}/index", f"{tmp}/q", f"{tmp}/ckpt"
+        run(
+            GrowingSemanticScreen(f"{tmp}/index", f"{tmp}/q"),
+            file_stream(spark, f"{tmp}/feed"),
+            f"{tmp}/ckpt",
         )
         streamed_kept = sorted(
             r.vec_id

@@ -10,10 +10,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kafka_overwatch_spark.operators.relational import scd1_upsert
-from kafka_overwatch_spark.streaming.upsert import (
-    Scd1DimensionMaintainer,
-    run_scd1_stream,
-)
+from kafka_overwatch_spark.streaming.state import file_stream, run
+from kafka_overwatch_spark.streaming.upsert import Scd1DimensionMaintainer
 
 KEYS = ["cluster", "name"]
 
@@ -51,14 +49,14 @@ def test_streamed_upsert_equals_batch_fold(spark, snaps):
     with tempfile.TemporaryDirectory() as tmp:
         for i, b in enumerate(batches):
             b.coalesce(1).write.mode("append").parquet(f"{tmp}/in")
-        run_scd1_stream(
-            spark,
-            f"{tmp}/in",
-            "cluster string, name string, partitions long, seq long",
-            f"{tmp}/state",
+        run(
+            Scd1DimensionMaintainer(f"{tmp}/state", KEYS, "seq"),
+            file_stream(
+                spark,
+                f"{tmp}/in",
+                "cluster string, name string, partitions long, seq long",
+            ),
             f"{tmp}/ck",
-            KEYS,
-            "seq",
         )
         m = Scd1DimensionMaintainer(f"{tmp}/state", KEYS, "seq")
         got = {
